@@ -101,6 +101,10 @@ object Tables {
       // aggregate runs at high key counts in these sessions.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         "10000000")
+      // local checkpoints through java.nio instead of Hadoop's local
+      // filesystem, which forks chmod/stat per file (see CheckpointFiles)
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        classOf[CheckpointFiles].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

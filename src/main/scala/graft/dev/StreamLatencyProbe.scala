@@ -160,9 +160,10 @@ object StreamLatencyProbe {
     val spark = Tables.localSession("stream-latency", cores = 32)
     // Stateful-stream sizing (round-12 VERDICT #3; see StreamLatencySpec
     // for the full rationale): state-store partition count is pinned
-    // from this conf at query start, and each store's delta commit is an
-    // fsync-bound fixed cost — right-size to the per-trigger volume
-    // instead of inheriting the batch-analytics 32. Measured at sf0.1
+    // from this conf at query start, and each store's delta commit is a
+    // fixed cost (Hadoop's local filesystem forked chmod/stat per file
+    // until CheckpointFiles; not fsync) — right-size to the per-trigger
+    // volume instead of inheriting the batch-analytics 32. Measured at sf0.1
     // 500-doc batches: p50 1239 ms @ 32 → 628-700 ms @ 8 (CurationProfile
     // A/B; RocksDB+changelog 10.5 s, measured and rejected).
     spark.conf.set("spark.sql.shuffle.partitions", "8")

@@ -1,11 +1,10 @@
 package graft.ml
 
-import org.apache.spark.ml.{Pipeline, PipelineModel}
-import org.apache.spark.ml.classification.RandomForestClassifier
+import org.apache.spark.ml.{GraftMlBridge, Pipeline, PipelineModel}
+import org.apache.spark.ml.classification.{RandomForestClassificationModel, RandomForestClassifier}
 import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
-import org.apache.spark.ml.feature.{OneHotEncoder, VectorAssembler}
-import org.apache.spark.ml.functions.vector_to_array
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.ml.feature.{OneHotEncoder, OneHotEncoderModel, VectorAssembler}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 
@@ -26,8 +25,12 @@ import graft.core.Tables
   *    (ml_k_to_ss.py:51), probability rounded to 2 dp at the notifier edge
   *    (ml_IFTTT.py:15).
   *
-  * Scale: training is MLlib's distributed RF; scoring is a single
-  * narrow-map model transform — no shuffle, streams through 100 TB.
+  * Scale: training is MLlib's distributed RF, and the fitted
+  * `PipelineModel` is what persists. Scoring does not run the pipeline's
+  * UDF stages: the fitted forest is flattened into primitive arrays and
+  * evaluated by one code-generating Catalyst expression ([[ForestScore]])
+  * over the 14 int columns — a narrow map with no shuffle, no vector
+  * columns, and no model object graph shipped with each task.
   */
 object QuarterPrediction {
 
@@ -90,20 +93,48 @@ object QuarterPrediction {
     new Pipeline().setStages(Array(ohe, assembler, rf)).fit(df)
   }
 
+  /** The fitted pipeline's forest and its category count, after checking
+    * the pipeline is the one [[train]] fits: OneHotEncoder (dropLast,
+    * handleInvalid=error) → VectorAssembler (handleInvalid=error) →
+    * forest without thresholds over exactly the assembled slots. */
+  private def forestOf(pm: PipelineModel): (RandomForestClassificationModel, Int) =
+    pm.stages match {
+      case Array(ohe: OneHotEncoderModel, asm: VectorAssembler,
+          rf: RandomForestClassificationModel) =>
+        val classVec = s"${categoricalCol}_classVec"
+        require(ohe.getInputCols.toSeq == Seq(categoricalCol) &&
+          ohe.getOutputCols.toSeq == Seq(classVec) && ohe.getDropLast &&
+          ohe.getHandleInvalid == "error", s"unexpected encoder: ${ohe.extractParamMap()}")
+        require(asm.getInputCols.toSeq == featureCols :+ classVec &&
+          asm.getOutputCol == rf.getFeaturesCol && asm.getHandleInvalid == "error",
+          s"unexpected assembler: ${asm.extractParamMap()}")
+        require(!rf.isDefined(rf.thresholds), "forest with class thresholds")
+        val categories = ohe.categorySizes(0)
+        require(rf.numFeatures == featureCols.size + categories - 1, // dropLast
+          s"feature-slot mismatch: rf=${rf.numFeatures} vs ${featureCols.size}+${categories - 1}")
+        (rf, categories)
+      case stages =>
+        throw new IllegalArgumentException("expected OneHotEncoder → VectorAssembler → " +
+          s"RandomForest, got ${stages.map(_.getClass.getSimpleName).mkString(" → ")}")
+    }
+
   /** Score and project the reference's observable output: prediction,
     * probability-of-predicted-class (Q3), and the "{pred},{prob}" message
-    * (Q5), prob rounded 2 dp as at the notifier edge. */
+    * (Q5), prob rounded 2 dp as at the notifier edge. The model's shape is
+    * checked here, when the plan is built, not at its first row. */
   def score(model: PipelineModel, df: DataFrame): DataFrame = {
-    val probArr = vector_to_array(col("probability"))
-    val probOfPred = element_at(probArr, col("prediction").cast("int") + 1)
-    model.transform(df)
-      .withColumn("prob", probOfPred)
-      // p1 = P(class 1): the continuous ranking score AUC needs (a hard 0/1
-      // prediction would make AUC degenerate — accuracy in disguise)
-      .withColumn("p1", element_at(probArr, 2))
+    val (rf, categories) = forestOf(model)
+    val inputs = featureCols :+ categoricalCol
+    val forest = FlatForest(GraftMlBridge.trees(rf), inputs, categories)
+    val scored = GraftSqlBridge.column(
+      ForestScore(inputs.map(c => GraftSqlBridge.expression(col(c))), forest))
+    // p1 = P(class 1): the continuous ranking score AUC needs (a hard 0/1
+    // prediction would make AUC degenerate — accuracy in disguise)
+    df.withColumn("_forest", scored)
+      .select(col("*"), col("_forest.*")) // prediction, prob, p1
+      .drop("_forest")
       .withColumn("msg",
         concat_ws(",", col("prediction").cast("int"), round(col("prob"), 2)))
-      .drop("features", s"${categoricalCol}_classVec", "rawPrediction", "probability")
   }
 
   /** AUC on a scored frame (ml_model.py:31-33, the intended metric):
@@ -162,13 +193,7 @@ object QuarterPrediction {
   /** Compiles the fitted pipeline's forest into the full `ml_rf_score`
     * oracle SQL. See [[RfSqlCompiler]] for the replay contract. */
   private def compileOracle(pm: PipelineModel): String = {
-    val rf = pm.stages(2)
-      .asInstanceOf[org.apache.spark.ml.classification.RandomForestClassificationModel]
-    val nCat = pm.stages(0)
-      .asInstanceOf[org.apache.spark.ml.feature.OneHotEncoderModel]
-      .categorySizes(0) - 1 // dropLast
-    require(rf.numFeatures == featureCols.size + nCat,
-      s"feature-slot mismatch: rf=${rf.numFeatures} vs ${featureCols.size}+$nCat")
+    val (rf, _) = forestOf(pm)
     // feature-vector slot i → SQL over the feature frame: the 13 int
     // columns in assembler order, then the OHE classVec (dropLast) as
     // explicit 0/1 indicators of enemyStyle
