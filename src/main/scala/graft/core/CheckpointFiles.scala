@@ -87,8 +87,7 @@ class NioCheckpointFileManager(root: Path) extends CheckpointFileManager {
 
   def delete(p: Path): Unit = {
     val target = local(p)
-    if (Files.isDirectory(target))
-      Using.resource(Files.walk(target)) { _.iterator.asScala.toSeq.reverse.foreach(Files.delete) }
+    if (Files.isDirectory(target)) deleteTree(target)
     else Files.deleteIfExists(target)
     Files.deleteIfExists(crc(target))
   }
@@ -104,6 +103,11 @@ class NioCheckpointFileManager(root: Path) extends CheckpointFileManager {
 object NioCheckpointFileManager {
 
   private def local(p: Path): JPath = JPath.of(p.toUri.getPath)
+
+  /** Deletes `dir` and everything under it; a missing `dir` is a no-op. */
+  def deleteTree(dir: JPath): Unit =
+    if (Files.exists(dir))
+      Using.resource(Files.walk(dir)) { _.iterator.asScala.toSeq.reverse.foreach(Files.delete) }
 
   /** Hadoop's checksum file beside `file`. */
   private def crc(file: JPath): JPath = file.resolveSibling(s".${file.getFileName}.crc")

@@ -105,13 +105,15 @@ object StreamLatencyProbe {
     val mem = MemoryStream[(Long, String, Long)]
     val shaped = mem.toDF().toDF("doc_id", "text", "us")
       .withColumn("ts", timestamp_micros(col("us")))
-    val ckpt = java.nio.file.Files.createTempDirectory("latency-cur").toString
-    val q = Jobs.curationSink(Jobs.curationStream(shaped, evalSet),
-        budget = Long.MaxValue / 4) { (sel, _) => sel.count(); () }
-      .option("checkpointLocation", ckpt).start()
-    val feeds = slices(docs.toSeq, nBatches)
-      .map(g => () => { mem.addData(g.map { case (id, t) => (id, t, t0) }.toIndexedSeq: _*); () })
-    run(q, feeds)
+    val ckpt = java.nio.file.Files.createTempDirectory("latency-cur")
+    try {
+      val q = Jobs.curationSink(Jobs.curationStream(shaped, evalSet),
+          budget = Long.MaxValue / 4) { (sel, _) => sel.count(); () }
+        .option("checkpointLocation", ckpt.toString).start()
+      val feeds = slices(docs.toSeq, nBatches)
+        .map(g => () => { mem.addData(g.map { case (id, t) => (id, t, t0) }.toIndexedSeq: _*); () })
+      try run(q, feeds) finally q.stop()
+    } finally graft.core.NioCheckpointFileManager.deleteTree(ckpt)
   }
 
   /** annServe: frozen index over vec_id >= nQueries, the first nQueries
@@ -164,8 +166,9 @@ object StreamLatencyProbe {
     // fixed cost (Hadoop's local filesystem forked chmod/stat per file
     // until CheckpointFiles; not fsync) — right-size to the per-trigger
     // volume instead of inheriting the batch-analytics 32. Measured at sf0.1
-    // 500-doc batches: p50 1239 ms @ 32 → 628-700 ms @ 8 (CurationProfile
-    // A/B; RocksDB+changelog 10.5 s, measured and rejected).
+    // 500-doc batches: p50 1239 ms @ 32 → 628-700 ms @ 8 (an A/B with the
+    // since-deleted dev/CurationProfile probe; RocksDB+changelog 10.5 s,
+    // measured and rejected).
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     // one warmup batch job to absorb session/codegen startup
     try graft.SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
@@ -175,7 +178,8 @@ object StreamLatencyProbe {
     // dominated by fixed micro-batch machinery (after the round-11 cut —
     // one upstream execution + trigger-bounded cumsum — what remains is
     // the dedup-watermark state-store commit wave and offset/commit log
-    // writes; CurationProfile attributes it per phase), so rows/s rising
+    // writes; perfbench's traced curation_stream run attributes it per
+    // phase, as the deleted dev/CurationProfile did), so rows/s rising
     // with batch size is the evidence that the composition amortizes —
     // the ingest pipeline's operating point is throughput per trigger,
     // not single-row latency (that is annServe's job).

@@ -743,9 +743,11 @@ object Sampling {
 
   /** Doc-id-ordered token cumsum in the two-phase budget shape — expects
     * (doc_id, n_tokens), adds `cum_tokens`. The ONE definition of the
-    * budget-stage running total, shared by `corpus_token_budget`'s e2e
-    * sibling and the streaming curation twin (`Jobs.curationSink`), so the
-    * selection arithmetic cannot fork between batch and stream. Never a
+    * budget-stage running total of `corpus_token_budget`'s e2e sibling.
+    * The streaming curation twin (`Jobs.curationSink`) runs the same
+    * exact-long arithmetic over the same doc_id order on each collected
+    * micro-batch, and StreamingSpec's curation parity test checks the
+    * streamed selection against this function's. Never a
     * corpus-wide single-partition window: range-bucket totals →
     * [[bucketOffsets]] recursive reduction → within-bucket windows. */
   private[graft] def docOrderedCumsum(df: DataFrame): DataFrame = {
@@ -759,39 +761,6 @@ object Sampling {
       .withColumn("cum_tokens",
         (col("offset") + sum("n_tokens").over(wIn)).cast("long"))
       .drop("rb", "offset")
-  }
-
-  /** TRIGGER-BOUNDED cumsum — [[docOrderedCumsum]]'s semantics for ONE
-    * streaming micro-batch (round-10 VERDICT #2: the recursive bucket
-    * machinery is corpus-scale plumbing; at micro-batch sizes its
-    * groupBy + join + window chain is pure per-trigger fixed cost,
-    * ~6 shuffle stages for a few hundred rows). The frame here is
-    * bounded by the TRIGGER — rows one micro-batch admitted, never the
-    * corpus — so the prefix runs as the explicit single-partition
-    * running sum [[bucketOffsets]] already uses for its terminal frame
-    * (repartition(1) + sort + one mapPartitions task): 1 exchange +
-    * 1 narrow stage. All arithmetic is exact longs over the same
-    * (doc_id asc) order, so the result is bit-identical to
-    * [[docOrderedCumsum]] on the same frame — the selection arithmetic
-    * cannot fork (StreamingSpec proves the composed batch/stream
-    * parity). Expects (doc_id, n_tokens); adds `cum_tokens`. */
-  private[graft] def microBatchCumsum(df: DataFrame): DataFrame = {
-    val ordered = df
-      .withColumn("__nt", col("n_tokens").cast("long"))
-      .repartition(1).sortWithinPartitions("doc_id")
-    val enc = org.apache.spark.sql.Encoders.row(
-      ordered.schema.add("cum_tokens", org.apache.spark.sql.types.LongType,
-        nullable = false))
-    val ntIdx = ordered.schema.fieldIndex("__nt")
-    ordered.mapPartitions { it =>
-      var acc = 0L
-      it.map { r =>
-        // null-tolerant like the sum(coalesce) path it replaced: a null
-        // n_tokens doc contributes 0 instead of NPE-killing the stream
-        if (!r.isNullAt(ntIdx)) acc += r.getLong(ntIdx)
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ acc)
-      }
-    }(enc).drop("__nt")
   }
 
   /** PER-SOURCE CAP — the Common-Crawl-style curation rule "keep at most
@@ -964,8 +933,8 @@ object Sampling {
       .join(contaminated, Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("n_tokens").cast("long").as("n_tokens"))
     // stage 4: two-phase budget cumsum (the corpus_token_budget plan; the
-    // offsets window runs on the range-bucket-reduced frame only) — shared
-    // with the streaming curation twin via docOrderedCumsum
+    // offsets window runs on the range-bucket-reduced frame only); the
+    // streaming curation twin's per-batch arithmetic is checked against it
     val sel = docOrderedCumsum(surv).filter(col("cum_tokens") <= E2eBudget)
     // stage 5: per-shard packing of the selected stream (pack_sequences)
     val wPack = Window.partitionBy("shard").orderBy("doc_id")

@@ -35,9 +35,11 @@ class StreamLatencySpec extends AnyFunSuite with BeforeAndAfterAll {
     // pure commit-wave tax. The ingest harness right-sizes to 8, the same
     // sizing a production deployment does per expected per-trigger
     // volume (a 1000-executor firehose sets thousands). Measured at
-    // sf0.1 500-doc batches: p50 1239 ms @ 32 → 628-700 ms @ 8
-    // (CurationProfile A/B; RocksDB+changelog measured 10.5 s and
-    // rejected — 32 instance commits dwarf the HDFS-store deltas here).
+    // sf0.1 500-doc batches: p50 1239 ms @ 32 → 628-700 ms @ 8 (an A/B
+    // with the since-deleted dev/CurationProfile probe, whose per-trigger
+    // breakdown perfbench's traced curation_stream run now records;
+    // RocksDB+changelog measured 10.5 s and rejected — 32 instance
+    // commits dwarf the HDFS-store deltas here).
     s.conf.set("spark.sql.shuffle.partitions", "8")
     s
   }

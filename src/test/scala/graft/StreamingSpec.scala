@@ -64,14 +64,16 @@ class StreamingSpec extends AnyFunSuite {
     // batch loader uses, whichever ts layout the file has)
     import java.nio.file.{Files, Path}
     val dir = Files.createTempDirectory("evstream")
-    Files.copy(Path.of(s"$sf/events.parquet"), dir.resolve("events.parquet"))
-    val streamed = spark.readStream
-      .schema(events.drop("ts_micros", "t_us").schema)
-      .parquet(dir.toString)
-      .transform(Tables.canonicalEventTime)
-      .transform(Jobs.windowedEventCounts)
-    val got = Jobs.runToMemory(spark, streamed, "win_stream", OutputMode.Complete)
-    assert(got.count() == out.count())
+    try {
+      Files.copy(Path.of(s"$sf/events.parquet"), dir.resolve("events.parquet"))
+      val streamed = spark.readStream
+        .schema(events.drop("ts_micros", "t_us").schema)
+        .parquet(dir.toString)
+        .transform(Tables.canonicalEventTime)
+        .transform(Jobs.windowedEventCounts)
+      val got = Jobs.runToMemory(spark, streamed, "win_stream", OutputMode.Complete)
+      assert(got.count() == out.count())
+    } finally deleteTrees(dir)
   }
 
   test("streaming trending top-k: sketch ranks inside windows, batch ≡ stream") {
@@ -139,32 +141,34 @@ class StreamingSpec extends AnyFunSuite {
     val in = Files.createTempDirectory("ckpt_in")
     val out = Files.createTempDirectory("ckpt_out")
     val ckpt = Files.createTempDirectory("ckpt_meta")
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
-    def runOnce(): Unit = {
-      val q = Jobs.streamingDedupUnbounded(
-        spark.readStream.schema(schema).json(in.toString), "text")
-        .writeStream.format("parquet")
-        .option("path", out.toString)
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("append").start()
-      q.processAllAvailable(); q.stop()
-    }
-    Files.writeString(in.resolve("b1.json"),
-      """{"id":1,"text":"alpha"}""" + "\n" + """{"id":2,"text":"beta"}""" + "\n")
-    runOnce()
-    // "alpha" repeats ACROSS the restart; "gamma" is new
-    Files.writeString(in.resolve("b2.json"),
-      """{"id":3,"text":"alpha"}""" + "\n" + """{"id":4,"text":"gamma"}""" + "\n")
-    runOnce()
-    val texts = spark.read.schema(schema.add("h",
-      org.apache.spark.sql.types.StringType)).parquet(out.toString)
-      .select("text").collect().map(_.getString(0)).sorted.toSeq
-    assert(texts == Seq("alpha", "beta", "gamma"),
-      s"restart must neither replay batch 1 nor forget its dedup state: $texts")
+    try {
+      val schema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("id",
+          org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("text",
+          org.apache.spark.sql.types.StringType)))
+      def runOnce(): Unit = {
+        val q = Jobs.streamingDedupUnbounded(
+          spark.readStream.schema(schema).json(in.toString), "text")
+          .writeStream.format("parquet")
+          .option("path", out.toString)
+          .option("checkpointLocation", ckpt.toString)
+          .outputMode("append").start()
+        q.processAllAvailable(); q.stop()
+      }
+      Files.writeString(in.resolve("b1.json"),
+        """{"id":1,"text":"alpha"}""" + "\n" + """{"id":2,"text":"beta"}""" + "\n")
+      runOnce()
+      // "alpha" repeats ACROSS the restart; "gamma" is new
+      Files.writeString(in.resolve("b2.json"),
+        """{"id":3,"text":"alpha"}""" + "\n" + """{"id":4,"text":"gamma"}""" + "\n")
+      runOnce()
+      val texts = spark.read.schema(schema.add("h",
+        org.apache.spark.sql.types.StringType)).parquet(out.toString)
+        .select("text").collect().map(_.getString(0)).sorted.toSeq
+      assert(texts == Seq("alpha", "beta", "gamma"),
+        s"restart must neither replay batch 1 nor forget its dedup state: $texts")
+    } finally deleteTrees(in, out, ckpt)
   }
 
   test("funnelSteps checkpoint recovery: a restarted query keeps funnel positions") {
@@ -176,43 +180,45 @@ class StreamingSpec extends AnyFunSuite {
     val in = Files.createTempDirectory("fun_in")
     val out = Files.createTempDirectory("fun_out")
     val ckpt = Files.createTempDirectory("fun_ckpt")
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("userId",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("tsMicros",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("eventType",
-        org.apache.spark.sql.types.StringType)))
-    import spark.implicits._
-    def runOnce(): Unit = {
-      val q = Jobs.funnelSteps(
-        spark.readStream.schema(schema).json(in.toString).as[Jobs.FunnelEvent])
-        .writeStream.format("parquet")
-        .option("path", out.toString)
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("append").start()
-      q.processAllAvailable(); q.stop()
-    }
-    val t0 = 1700000000000000L
-    val hour = 3600L * 1000000
-    Files.writeString(in.resolve("b1.json"),
-      s"""{"userId":7,"tsMicros":$t0,"eventType":"signup"}""" + "\n")
-    runOnce()
-    Files.writeString(in.resolve("b2.json"),
-      s"""{"userId":7,"tsMicros":${t0 + hour},"eventType":"view"}""" + "\n" +
-      s"""{"userId":7,"tsMicros":${t0 + 2 * hour},"eventType":"click"}""" + "\n")
-    runOnce()
-    val hits = spark.read.schema(org.apache.spark.sql.types.StructType(Seq(
+    try {
+      val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("userId",
           org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("step",
-          org.apache.spark.sql.types.IntegerType),
         org.apache.spark.sql.types.StructField("tsMicros",
-          org.apache.spark.sql.types.LongType))))
-      .parquet(out.toString).collect()
-      .map(r => (r.getInt(1), r.getLong(2))).sortBy(_._1).toSeq
-    assert(hits == Seq((1, t0), (2, t0 + hour), (3, t0 + 2 * hour)),
-      s"restart must resume from recovered step-1 state, exactly-once: $hits")
+          org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("eventType",
+          org.apache.spark.sql.types.StringType)))
+      import spark.implicits._
+      def runOnce(): Unit = {
+        val q = Jobs.funnelSteps(
+          spark.readStream.schema(schema).json(in.toString).as[Jobs.FunnelEvent])
+          .writeStream.format("parquet")
+          .option("path", out.toString)
+          .option("checkpointLocation", ckpt.toString)
+          .outputMode("append").start()
+        q.processAllAvailable(); q.stop()
+      }
+      val t0 = 1700000000000000L
+      val hour = 3600L * 1000000
+      Files.writeString(in.resolve("b1.json"),
+        s"""{"userId":7,"tsMicros":$t0,"eventType":"signup"}""" + "\n")
+      runOnce()
+      Files.writeString(in.resolve("b2.json"),
+        s"""{"userId":7,"tsMicros":${t0 + hour},"eventType":"view"}""" + "\n" +
+        s"""{"userId":7,"tsMicros":${t0 + 2 * hour},"eventType":"click"}""" + "\n")
+      runOnce()
+      val hits = spark.read.schema(org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("userId",
+            org.apache.spark.sql.types.LongType),
+          org.apache.spark.sql.types.StructField("step",
+            org.apache.spark.sql.types.IntegerType),
+          org.apache.spark.sql.types.StructField("tsMicros",
+            org.apache.spark.sql.types.LongType))))
+        .parquet(out.toString).collect()
+        .map(r => (r.getInt(1), r.getLong(2))).sortBy(_._1).toSeq
+      assert(hits == Seq((1, t0), (2, t0 + hour), (3, t0 + 2 * hour)),
+        s"restart must resume from recovered step-1 state, exactly-once: $hits")
+    } finally deleteTrees(in, out, ckpt)
   }
 
   test("streaming dedup drops repeated payloads across micro-batches") {
@@ -511,25 +517,27 @@ class StreamingSpec extends AnyFunSuite {
   test("idempotent foreachBatch sink: batch replay never duplicates rows") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("idem-sink").toString
-    val data = s"$dir/data"
-    // streaming path: two batches land in their own partitions
-    val mem = MemoryStream[(Long, String)]
-    val q = Jobs.idempotentParquetSink(
-      mem.toDF().toDF("id", "value"), data, s"$dir/ckpt").start()
-    mem.addData((1L, "a"), (2L, "b"))
-    q.processAllAvailable()
-    mem.addData((3L, "c"))
-    q.processAllAvailable()
-    q.stop()
-    assert(spark.read.parquet(data).count() == 3)
-    // crash-replay simulation: re-writing batch 1 (as the checkpoint would
-    // after a failure between write and commit) must be a no-op overwrite
-    Jobs.writeBatchIdempotent(Seq((3L, "c")).toDF("id", "value"), 1L, data)
-    Jobs.writeBatchIdempotent(Seq((3L, "c")).toDF("id", "value"), 1L, data)
-    val after = spark.read.parquet(data)
-    assert(after.count() == 3, s"replay duplicated rows: ${after.collect().toSeq}")
-    assert(after.filter(col("batch_id") === 0).count() == 2, "other batches untouched")
+    val dir = java.nio.file.Files.createTempDirectory("idem-sink")
+    try {
+      val data = s"$dir/data"
+      // streaming path: two batches land in their own partitions
+      val mem = MemoryStream[(Long, String)]
+      val q = Jobs.idempotentParquetSink(
+        mem.toDF().toDF("id", "value"), data, s"$dir/ckpt").start()
+      mem.addData((1L, "a"), (2L, "b"))
+      q.processAllAvailable()
+      mem.addData((3L, "c"))
+      q.processAllAvailable()
+      q.stop()
+      assert(spark.read.parquet(data).count() == 3)
+      // crash-replay simulation: re-writing batch 1 (as the checkpoint would
+      // after a failure between write and commit) must be a no-op overwrite
+      Jobs.writeBatchIdempotent(Seq((3L, "c")).toDF("id", "value"), 1L, data)
+      Jobs.writeBatchIdempotent(Seq((3L, "c")).toDF("id", "value"), 1L, data)
+      val after = spark.read.parquet(data)
+      assert(after.count() == 3, s"replay duplicated rows: ${after.collect().toSeq}")
+      assert(after.filter(col("batch_id") === 0).count() == 2, "other batches untouched")
+    } finally deleteTrees(dir)
   }
 
   test("transformWithState: per-source running ingest stats across micro-batches") {
@@ -650,17 +658,19 @@ class StreamingSpec extends AnyFunSuite {
       .withColumn("ts", timestamp_micros($"us"))
     val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
     val ckpt = java.nio.file.Files.createTempDirectory("curation-ckpt").toString
-    val q = Jobs.curationSink(Jobs.curationStream(shaped, evalSet), budget) {
-      (sel, _) =>
-        got ++= sel.select("doc_id", "n_tokens", "cum_tokens").collect()
-          .map(r => (r.getLong(0), r.getAs[Number](1).longValue(), r.getLong(2)))
-        ()
-    }.option("checkpointLocation", ckpt).start()
-    docs.foreach { b =>
-      mem.addData(b.map { case (id, t) => (id, t, t0) }: _*)
-      q.processAllAvailable()
-    }
-    q.stop()
+    try {
+      val q = Jobs.curationSink(Jobs.curationStream(shaped, evalSet), budget) {
+        (sel, _) =>
+          got ++= sel.select("doc_id", "n_tokens", "cum_tokens").collect()
+            .map(r => (r.getLong(0), r.getAs[Number](1).longValue(), r.getLong(2)))
+          ()
+      }.option("checkpointLocation", ckpt).start()
+      docs.foreach { b =>
+        mem.addData(b.map { case (id, t) => (id, t, t0) }: _*)
+        q.processAllAvailable()
+      }
+      q.stop()
+    } finally deleteTrees(java.nio.file.Path.of(ckpt))
 
     // --- batch chain of the SAME stage definitions
     val all = docs.flatten.toDF("doc_id", "text")
@@ -699,45 +709,214 @@ class StreamingSpec extends AnyFunSuite {
     val in = Files.createTempDirectory("cur_in")
     val ckpt = Files.createTempDirectory("cur_ckpt")
     val state = Files.createTempDirectory("cur_state")
-    val evalSet = {
-      import spark.implicits._
-      Seq((1 to 9).map(i => s"bench$i").mkString(" ")).toDF("text")
+    try {
+      val evalSet = {
+        import spark.implicits._
+        Seq((1 to 9).map(i => s"bench$i").mkString(" ")).toDF("text")
+      }
+      val schema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("doc_id",
+          org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("text",
+          org.apache.spark.sql.types.StringType),
+        org.apache.spark.sql.types.StructField("us",
+          org.apache.spark.sql.types.LongType)))
+      val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+      def runOnce(): Unit = {
+        val shaped = spark.readStream.schema(schema).json(in.toString)
+          .withColumn("ts", timestamp_micros(col("us")))
+        val q = Jobs.curationSink(
+          Jobs.curationStream(shaped, evalSet), budget = 45L,
+          stateDir = Some(state.toString)) { (sel, _) =>
+          got ++= sel.select("doc_id", "cum_tokens").collect()
+            .map(r => (r.getLong(0), r.getLong(1)))
+          ()
+        }.option("checkpointLocation", ckpt.toString).start()
+        q.processAllAvailable(); q.stop()
+      }
+      val t0 = 1700000000000000L
+      def doc(id: Long, p: String, n: Int) =
+        s"""{"doc_id":$id,"text":"${(1 to n).map(i => s"$p$i").mkString(" ")}","us":$t0}"""
+      // batch 1: 30 survivor tokens → counter must land at 30
+      Files.writeString(in.resolve("b1.json"),
+        doc(1, "alpha", 12) + "\n" + doc(2, "beta", 18) + "\n")
+      runOnce()
+      // restart; batch 2: 10-token doc fits (cum 40 ≤ 45), 8-token doesn't
+      // (cum 48) — iff the 30 was recovered
+      Files.writeString(in.resolve("b2.json"),
+        doc(3, "gamma", 10) + "\n" + doc(4, "delta", 8) + "\n")
+      runOnce()
+      assert(got.toSet == Set((1L, 12L), (2L, 30L), (3L, 40L)),
+        s"restart must resume the 30-token ledger (4 rejected at cum 48): " +
+          s"${got.toSet}")
+    } finally deleteTrees(in, ckpt, state)
+  }
+
+  test("curationSink runs each data trigger as ONE Spark job and caches nothing") {
+    // counter pin for the driver-side budget: the gated micro-batch is
+    // collected once and the emitted frame is local, so a trigger that
+    // carries data starts exactly one job (jobs are matched to triggers by
+    // the batch-id local property streaming sets), and no persisted frame
+    // exists during or after the emit
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    // frames an earlier suite cached in the shared session would mask the check
+    spark.catalog.clearCache()
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    val evalSet = Seq((1 to 9).map(i => s"bench$i").mkString(" ")).toDF("text")
+    val mem = MemoryStream[(Long, String, Long)]
+    val shaped = mem.toDF().toDF("doc_id", "text", "us")
+      .withColumn("ts", timestamp_micros($"us"))
+    val marker = "curation-job-count-marker"
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val jobsByBatch = new java.util.concurrent.ConcurrentHashMap[(String, Long), Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = Option(e.properties).getOrElse(new java.util.Properties)
+        Option(p.getProperty("streaming.sql.batchId")).foreach { b =>
+          jobsByBatch.merge((p.getProperty("sql.streaming.queryId"), b.toLong), 1,
+            (x: Int, y: Int) => x + y)
+        }
+        if (p.getProperty("spark.job.description") == marker) markerSeen.countDown()
+      }
     }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("us",
-        org.apache.spark.sql.types.LongType)))
-    val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    def runOnce(): Unit = {
-      val shaped = spark.readStream.schema(schema).json(in.toString)
-        .withColumn("ts", timestamp_micros(col("us")))
-      val q = Jobs.curationSink(
-        Jobs.curationStream(shaped, evalSet), budget = 45L,
-        stateDir = Some(state.toString)) { (sel, _) =>
+    val cachedDuringEmit = new java.util.concurrent.atomic.AtomicInteger
+    val emitted = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val ckpt = java.nio.file.Files.createTempDirectory("curation-jobs")
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val q = Jobs.curationSink(Jobs.curationStream(shaped, evalSet),
+          budget = Long.MaxValue / 4) { (sel, _) =>
+        if (!cacheManager.isEmpty) cachedDuringEmit.incrementAndGet()
+        emitted ++= sel.select("doc_id").collect().map(_.getLong(0))
+        ()
+      }.option("checkpointLocation", ckpt.toString).start()
+      try {
+        (0 until 4).foreach { b =>
+          mem.addData((0 until 5).map { i =>
+            val id = b * 10L + i
+            // alphabetic, distinct texts: every doc passes the gates
+            val tag = id.toString.map(c => ('a' + (c - '0')).toChar)
+            (id, (1 to 6 + i).map(w => tag + "x" * w).mkString(" "), 1700000000000000L)
+          }: _*)
+          q.processAllAvailable()
+          assert(cacheManager.isEmpty, s"a frame is still cached after trigger $b")
+        }
+      } finally q.stop()
+      // the listener bus delivers in order: once this job's start arrives,
+      // every streaming job's start has been counted
+      spark.sparkContext.setJobDescription(marker)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      val jobs = jobsByBatch.asScala.collect {
+        case ((qid, b), n) if qid == q.id.toString => b -> n }.toMap
+      val dataBatches = q.recentProgress.filter(_.numInputRows > 0).map(_.batchId)
+      assert(dataBatches.length >= 3, s"fixture must drive 3+ data triggers: $dataBatches")
+      dataBatches.foreach(b => assert(jobs.get(b).contains(1),
+        s"data trigger $b ran ${jobs.getOrElse(b, 0)} jobs: $jobs"))
+      assert(jobs.values.forall(_ == 1), s"a trigger ran more than one job: $jobs")
+      assert(cachedDuringEmit.get == 0, "the emitted selection read a cached frame")
+      assert(emitted.sorted == (0 until 4).flatMap(b => (0 until 5).map(b * 10L + _)))
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      deleteTrees(ckpt)
+    }
+  }
+
+  test("curationSink replay: a batch re-run after a crash reuses its ledger base") {
+    // crash between emit and checkpoint commit: batch 0 was emitted and its
+    // ledger entry written, but its commit-log entry is lost. The restarted
+    // query re-runs batch 0; it must emit the recorded selection (base 0
+    // from the ledger, not the seeded 30) and then advance the counter once.
+    // No watermark-only trigger may follow batch 0, so that batch 0 is the
+    // last batch and the one whose commit is lost.
+    import java.nio.file.Files
+    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    val in = Files.createTempDirectory("cur_replay_in")
+    val ckpt = Files.createTempDirectory("cur_replay_ckpt")
+    val state = Files.createTempDirectory("cur_replay_state")
+    try {
+      val evalSet = {
+        import spark.implicits._
+        Seq((1 to 9).map(i => s"bench$i").mkString(" ")).toDF("text")
+      }
+      val schema = org.apache.spark.sql.types.StructType.fromDDL(
+        "doc_id BIGINT, text STRING, us BIGINT")
+      val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
+      def runOnce(): Unit = {
+        val shaped = spark.readStream.schema(schema).json(in.toString)
+          .withColumn("ts", timestamp_micros(col("us")))
+        val q = Jobs.curationSink(
+          Jobs.curationStream(shaped, evalSet), budget = 45L,
+          stateDir = Some(state.toString)) { (sel, id) =>
+          got ++= sel.select("doc_id", "cum_tokens").collect()
+            .map(r => (id, r.getLong(0), r.getLong(1)))
+          ()
+        }.option("checkpointLocation", ckpt.toString).start()
+        try q.processAllAvailable() finally q.stop()
+      }
+      val t0 = 1700000000000000L
+      def doc(id: Long, p: String, n: Int) =
+        s"""{"doc_id":$id,"text":"${(1 to n).map(i => s"$p$i").mkString(" ")}","us":$t0}"""
+      Files.writeString(in.resolve("b1.json"),
+        doc(1, "alpha", 12) + "\n" + doc(2, "beta", 18) + "\n")
+      runOnce()
+      val first = got.toSeq
+      assert(first == Seq((0L, 1L, 12L), (0L, 2L, 30L)), s"batch 0: $first")
+      Files.delete(ckpt.resolve("commits").resolve("0"))
+      Files.writeString(in.resolve("b2.json"),
+        doc(3, "gamma", 10) + "\n" + doc(4, "delta", 8) + "\n")
+      runOnce()
+      val rerun = got.toSeq.drop(first.size)
+      assert(rerun.filter(_._1 == 0L) == first,
+        s"the replayed batch must re-emit the recorded selection: $rerun")
+      // base 30 + 10 fits, + 8 does not; a doubly advanced counter (60)
+      // would select nothing
+      assert(rerun.filter(_._1 == 1L) == Seq((1L, 3L, 40L)), s"batch 1: $rerun")
+      def entry(id: Int) = Files.readString(state.resolve(f"batch-$id%012d")).trim
+      assert(entry(0) == "0 30" && entry(1) == "30 18",
+        s"ledger: ${entry(0)} / ${entry(1)}")
+    } finally {
+      spark.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
+      deleteTrees(in, ckpt, state)
+    }
+  }
+
+  test("curationSink seeding ignores a stray tmp- file in the state dir") {
+    // an orphan of a crash between the ledger's temp write and its atomic
+    // move; parsed as an entry it would seed the counter at 2000, past
+    // the budget, and nothing would be selected
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    import java.nio.file.Files
+    val ckpt = Files.createTempDirectory("cur_tmp_ckpt")
+    val state = Files.createTempDirectory("cur_tmp_state")
+    try {
+      Files.writeString(state.resolve("tmp-12345"), "1000 1000")
+      val evalSet = Seq((1 to 9).map(i => s"bench$i").mkString(" ")).toDF("text")
+      val mem = MemoryStream[(Long, String, Long)]
+      val shaped = mem.toDF().toDF("doc_id", "text", "us")
+        .withColumn("ts", timestamp_micros($"us"))
+      val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+      val q = Jobs.curationSink(Jobs.curationStream(shaped, evalSet),
+          budget = 45L, stateDir = Some(state.toString)) { (sel, _) =>
         got ++= sel.select("doc_id", "cum_tokens").collect()
           .map(r => (r.getLong(0), r.getLong(1)))
         ()
       }.option("checkpointLocation", ckpt.toString).start()
-      q.processAllAvailable(); q.stop()
-    }
-    val t0 = 1700000000000000L
-    def doc(id: Long, p: String, n: Int) =
-      s"""{"doc_id":$id,"text":"${(1 to n).map(i => s"$p$i").mkString(" ")}","us":$t0}"""
-    // batch 1: 30 survivor tokens → counter must land at 30
-    Files.writeString(in.resolve("b1.json"),
-      doc(1, "alpha", 12) + "\n" + doc(2, "beta", 18) + "\n")
-    runOnce()
-    // restart; batch 2: 10-token doc fits (cum 40 ≤ 45), 8-token doesn't
-    // (cum 48) — iff the 30 was recovered
-    Files.writeString(in.resolve("b2.json"),
-      doc(3, "gamma", 10) + "\n" + doc(4, "delta", 8) + "\n")
-    runOnce()
-    assert(got.toSet == Set((1L, 12L), (2L, 30L), (3L, 40L)),
-      s"restart must resume the 30-token ledger (4 rejected at cum 48): " +
-        s"${got.toSet}")
+      try {
+        def words(p: String, n: Int) = (1 to n).map(i => s"$p$i").mkString(" ")
+        mem.addData((1L, words("alpha", 12), 1700000000000000L),
+          (2L, words("beta", 18), 1700000000000000L))
+        q.processAllAvailable()
+      } finally q.stop()
+      assert(got.toSet == Set((1L, 12L), (2L, 30L)), s"seeded from the tmp file: $got")
+      assert(Files.readString(state.resolve("batch-000000000000")).trim == "0 30")
+    } finally deleteTrees(ckpt, state)
   }
 
   test("anomalyAlerts: online z-alerts match the batch prior-window replay exactly") {
@@ -999,4 +1178,7 @@ class StreamingSpec extends AnyFunSuite {
         s"missing ${(want diff got.toSet).take(3)}")
     assert(want.size >= 10, s"fixture too small to prove parity: ${want.size} rows")
   }
+
+  private def deleteTrees(dirs: java.nio.file.Path*): Unit =
+    dirs.foreach(graft.core.NioCheckpointFileManager.deleteTree)
 }
