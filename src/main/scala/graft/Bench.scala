@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.core.Tables
 
 /** Benchmark main (driver contract): runs every declared query on
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line with per-query seconds.
@@ -48,55 +49,10 @@ import org.apache.spark.sql.SparkSession
   * `"queries_clean_failed"` instead of silently vanishing.
   */
 object Bench {
-  /** Session factory — also used by the end-of-sweep clean re-measure,
-    * which needs a genuinely FRESH SparkContext (the sweep-state inflation
-    * it quantifies lives in driver/ContextCleaner/status-store state that
-    * `clearCache()` cannot reset). */
-  private def mkSession(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // keep bounded-state top-k aggregates in the hash path (see
-      // Tables.localSession for the full rationale)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "10000000")
-      // Long-sweep hygiene. A 130-query sweep accumulates driver-side
-      // state a single-query run never sees: broadcast/shuffle blocks wait
-      // for a driver GC before ContextCleaner frees them (default periodic
-      // GC is 30 min — longer than the sweep), and the status store
-      // strongly retains execution/stage data for every pass even with the
-      // UI off. Queries mid-sweep measured up to 3× their isolated cost
-      // (corpus_dup_stats: 2.6 s isolated, 8.7 s mid-sweep); with these
-      // caps the same subset re-measured at 3.0–4.1 s. Host noise is ±20%
-      // between identical runs, so the raw per-pass arrays in
-      // BENCH_FULL.json remain the ground truth for spread.
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .config("spark.ui.retainedJobs", "50")
-      .config("spark.ui.retainedStages", "50")
-      .config("spark.ui.retainedTasks", "500")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The 7 pinned aggregate-bounded unpartitioned windows (PlanSpec's
-    // GLOBAL guard + PlanSpec.LegalUnpartitionedWindowQueries) would spam
-    // `WindowExec: No Partition Defined` across the tail and mask a NEW
-    // genuine offender. The guard — not this logger — is the protection:
-    // any unpartitioned window over a non-aggregated frame fails the test
-    // sweep, so the runtime warning carries no extra signal here.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
-    spark
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    var spark = mkSession(cpus)
+    val cpus = Tables.envCores
+    var spark = Tables.localSession("bench", cpus)
 
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () } // warmup only
@@ -134,9 +90,10 @@ object Bench {
     // a query's passes.
     val raw = scala.collection.mutable.LinkedHashMap.empty[String, List[Double]]
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // Dev-only subset filter (comma-separated names): isolates a query's
-    // cost while iterating. The driver never sets it, so round artifacts
-    // always cover the full surface.
+    // Subset filter (comma-separated names): times a query subset exactly
+    // like the sweep while iterating, raw per-pass times in BENCH_DEV.json.
+    // Full runs never set it, so round artifacts always cover the full
+    // surface.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
@@ -294,10 +251,13 @@ object Bench {
       if (only.nonEmpty || results.isEmpty) Seq.empty
       else {
         val top = results.sortBy(-_._2).take(10).map(_._1) ++ extraCleanNames
+        // a genuinely FRESH SparkContext: the sweep-state inflation this
+        // quantifies lives in ContextCleaner/status-store state that
+        // `clearCache()` cannot reset
         spark.stop()
         SparkSession.clearActiveSession()
         SparkSession.clearDefaultSession()
-        spark = mkSession(cpus)
+        spark = Tables.localSession("bench", cpus)
         try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
         catch { case _: Throwable => () } // warmup the fresh context
         top.distinct.flatMap { name =>
@@ -334,8 +294,7 @@ object Bench {
     // r13 verdict #4: echo the core count the run actually used (and the
     // master it derived) so the driver's scaling probe can verify
     // SPARK_GRAFT_CPUS was honored from the artifact alone.
-    val cpusJson = try { s""""cpus":${cpus.trim.toInt},""" }
-      catch { case _: NumberFormatException => s""""cpus":${jstr(cpus)},""" }
+    val cpusJson = s""""cpus":$cpus,"""
     val head = s"""{"metric":"total","value":${jnum(total)},"unit":"sec","sf":"$sfDir",$cpusJson"master":${jstr(s"local[$cpus]")},"n_queries":${results.size},"wall_sec":${jnum(wallSec)},"contention":${jnum(contention)},"n_spread":$nSpread,"spread":$spreadShort,"queries_clean":$cleanJson,$cleanFailedHead"n_failed":${failed.size},"failed":$failedShort,"""
     val bySlow = results.sortBy(-_._2).map { case (k, v) => jstr(k) + ":" + jnum(v) }
     // room for: "queries":{…},"queries_omitted":NNN}
@@ -355,7 +314,7 @@ object Bench {
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(fullPath), full + "\n")
     catch { case e: Throwable =>
-      System.err.println(s"[bench] BENCH_FULL.json write failed: ${e.getMessage}")
+      System.err.println(s"[bench] $fullPath write failed: ${e.getMessage}")
     }
     println(line)
     spark.stop()

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.Tables
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,26 +9,7 @@ object Verify {
     // sfDir hint for cold-start oracle resolution (ml_rf_score's persisted
     // compiled-forest SQL is keyed by sfDir; see QuarterPrediction)
     System.setProperty("graft.sf.dir", sfDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // keep bounded-state top-k aggregates in the hash path (see
-      // Tables.localSession for the full rationale)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "10000000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // see Bench: the pinned aggregate-bounded windows are guard-proven
-    // (PlanSpec.LegalUnpartitionedWindowQueries); the runtime warning is
-    // pure tail noise here
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = Tables.localSession("verify", Tables.envCores)
     new java.io.File(outDir).mkdirs()
     // Failure honesty: a throwing query MUST leave a visible artifact, not
     // silently vanish from the correctness compare (round 5 lost 21 red

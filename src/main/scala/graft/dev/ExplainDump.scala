@@ -4,11 +4,25 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
-/** Dev harness: dump formatted physical plans of the headline queries to a
-  * markdown artifact (`PLANS.md`) — the `.explain("formatted")` evidence
-  * behind every scale claim in COVERAGE.md, regenerable in one command.
+/** Dev harness: the one plan dumper. Two modes:
   *
-  * Usage: runMain graft.dev.ExplainDump <sfDir> [<outFile>]
+  *  - `ExplainDump [<sfDir>] [<outFile>]` dumps the formatted physical
+  *    plans of the headline queries to a markdown artifact (`PLANS.md`) —
+  *    the `.explain("formatted")` evidence behind every scale claim in
+  *    COVERAGE.md, regenerable in one command;
+  *  - `ExplainDump <sfDir> <outDir> <suffix> <name> [...]` writes each
+  *    named query's plan to `<outDir>/<name>_<suffix>.txt` — the
+  *    before/after plan evidence an optimization round commits next to its
+  *    bench numbers.
+  *
+  * Each query is executed first with `collect()` on the dumped frame's
+  * OWN QueryExecution, so the plan is the AQE-final one
+  * (`isFinalPlan=true`); a noop write would run a different
+  * QueryExecution and leave this one's plan initial. Queries that
+  * materialize intermediates via localCheckpoint run those jobs as a side
+  * effect, exactly as in Bench; their dumps show the post-checkpoint
+  * consumer plan. The formatted plan prints each Window's partition spec;
+  * PlanSpec's guards enforce the window rules.
   */
 object ExplainDump {
   /** (query, the scale property the plan demonstrates). */
@@ -90,31 +104,47 @@ object ExplainDump {
       "column — over the localCheckpointed assignment; the sharded " +
       "(cell, shard) plan only materializes when a cell overflows the cap."))
 
+  /** The AQE-final formatted physical plan of query `name` on `sfDir`. */
+  def formattedPlan(spark: SparkSession, sfDir: String, name: String): String = {
+    spark.catalog.clearCache() // no cross-query cache, as in Bench
+    val df = graft.SparkEntry.queries(name)(spark, sfDir)
+    df.collect()
+    df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val out = args.lift(1).getOrElse("PLANS.md")
     val spark = graft.core.Tables.localSession("explain-dump", cores = 8)
     spark.conf.set("spark.sql.maxMetadataStringLength", 500)
-    val sb = new StringBuilder
-    sb.append("# PLANS — formatted physical plans of the headline queries\n\n")
-    sb.append(s"Regenerate: `sbt 'runMain graft.dev.ExplainDump $sfDir'`. ")
-    sb.append("Plans are AQE-final (each query is executed first); ")
-    sb.append("see COVERAGE.md for the full per-operator scale rationale " +
-      "and PlanSpec for the assertions that keep these shapes from regressing.\n")
-    headliners.foreach { case (name, why) =>
-      val df = graft.SparkEntry.queries(name)(spark, sfDir)
-      df.collect() // force the AQE final plan
-      val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
-      val capped = {
-        val lines = plan.linesIterator.toSeq
-        if (lines.length <= 160) plan
-        else (lines.take(160) :+ s"... (${lines.length - 160} lines elided)")
-          .mkString("\n")
+    if (args.length > 3) {
+      val Array(outDir, suffix) = args.slice(1, 3)
+      Files.createDirectories(Paths.get(outDir))
+      args.drop(3).foreach { name =>
+        val out = s"$outDir/${name}_$suffix.txt"
+        Files.writeString(Paths.get(out), formattedPlan(spark, sfDir, name))
+        println(s"wrote $out")
       }
-      sb.append(s"\n## $name\n\n$why\n\n```\n$capped\n```\n")
+    } else {
+      val out = args.lift(1).getOrElse("PLANS.md")
+      val sb = new StringBuilder
+      sb.append("# PLANS — formatted physical plans of the headline queries\n\n")
+      sb.append(s"Regenerate: `sbt 'runMain graft.dev.ExplainDump $sfDir'`. ")
+      sb.append("Plans are AQE-final (each query is executed first); ")
+      sb.append("see COVERAGE.md for the full per-operator scale rationale " +
+        "and PlanSpec for the assertions that keep these shapes from regressing.\n")
+      headliners.foreach { case (name, why) =>
+        val plan = formattedPlan(spark, sfDir, name)
+        val capped = {
+          val lines = plan.linesIterator.toSeq
+          if (lines.length <= 160) plan
+          else (lines.take(160) :+ s"... (${lines.length - 160} lines elided)")
+            .mkString("\n")
+        }
+        sb.append(s"\n## $name\n\n$why\n\n```\n$capped\n```\n")
+      }
+      Files.writeString(Paths.get(out), sb.toString)
+      println(s"wrote $out")
     }
-    Files.writeString(Paths.get(out), sb.toString)
-    println(s"wrote $out")
     spark.stop()
   }
 }

@@ -56,7 +56,8 @@ object ScaleProbe {
   val X64Probes = Set("graph_pagerank", "graph_label_prop", "dedup_allpairs")
 
   /** Timed repeats per (query, scale); min is recorded. Round 11's
-    * probe-width decision was only trustworthy because RkCostProbe ran
+    * probe-width decision was only trustworthy because RkCostProbe (since
+    * deleted; its data is in BENCH_DEV_r11_probe_width.json) ran
     * STEADY-STATE repeats (this host swings 2–4× between identical runs;
     * the first-in-session execution pays ~100 s of page-cache/JIT warmup
     * — one session measured 47.6/107/174.6 s for three repeats of ONE
@@ -68,20 +69,7 @@ object ScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      // keep bounded-state top-k aggregates in the hash path (see
-      // Tables.localSession for the full rationale)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "10000000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Tables.localSession("scale-probe", cores = 32)
 
     // dev-only probe subset (comma-separated names; full runs never set it)
     val onlyProbes = sys.env.get("SPARK_GRAFT_PROBES")
@@ -197,7 +185,7 @@ object ScaleProbe {
     * id-keyed policy. */
   private val IdOffset = 100000007L
 
-  private[dev] def amplify(spark: SparkSession, base: String, k: Int,
+  private def amplify(spark: SparkSession, base: String, k: Int,
       out: String): String = {
     val docs = spark.read.parquet(s"$base/documents.parquet")
     val amplDocs = (0 until k).map { r =>

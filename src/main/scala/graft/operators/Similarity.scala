@@ -1053,7 +1053,8 @@ object Similarity {
     * window, no top-k heap: the shuffle after the candidate join carries
     * partial aggregates (2 tiny values per src per map partition), never
     * the Σ(2w+1)·cap·cell pair list the window map-side sorted — the
-    * 130 s ×32 steady-state knee RkCostProbe measured in round 11.
+    * 130 s ×32 steady-state knee the round-11 RkCostProbe (since deleted;
+    * its data is in BENCH_DEV_r11_probe_width.json) measured.
     * Arg-max key is the 4-dp-rounded cosine with dst tie-break (`-cos`
     * normalized `0.0 - cos` so a rounded −0.0 can't order against +0.0
     * differently than the window's sort did), so both engines pick

@@ -452,18 +452,9 @@ object TextOps {
     dfcapRecallOver(exact, cappedPairsAt08(s, d))
   }
 
-  /** The MATERIALIZED twin of `dedup_dfcap_recall` — certificate re-runs
-    * (cap sweeps) read the SHARED `shingle-index` / `allpairs-exact`
-    * snapshots (the same ones the minhash/simhash recall twins write:
-    * whichever certificate runs first pays the ground-truth build, every
-    * other gets a parquet read) and re-run only the capped chain. Same
-    * oracle SQL as the recompute twin, so the driver's hash compare IS
-    * the bit-identity proof. */
-  val dedupDfcapRecallMaterialized = sql(
-    "dedup_dfcap_recall_materialized", dfcapRecallOracleSql) { (s, d) =>
-    val (_, exact) = sharedExactPairs(s, d)
-    dfcapRecallOver(exact, cappedPairsAt08(s, d))
-  }
+  /** Alias of `dedup_dfcap_recall`: the same body and oracle under the twin name. */
+  val dedupDfcapRecallMaterialized =
+    dedupDfcapRecall.copy(name = "dedup_dfcap_recall_materialized")
 
   /** Spark side of `apairs`: the exact τ=0.8 pair set (da, db, common, un). */
   private def allpairsDf(s: org.apache.spark.sql.SparkSession, d: String) =
@@ -689,45 +680,9 @@ object TextOps {
         round(col("n_caught") * lit(1.0) / col("n_true"), 4).as("recall"))
   }
 
-
-  /** The MATERIALIZED twin of `dedup_minhash_recall` — the deployment
-    * shape for certificate re-runs: the shingle inverted index (the most
-    * expensive shared frame of the certificate — exploded, df-counted,
-    * rank-windowed, and joined twice by the AllPairs verify) is computed
-    * ONCE per corpus snapshot and written as parquet
-    * (`dedup_shingle_index` snapshot); the lossless AllPairs ground-truth
-    * chain runs over the snapshot and its verified pair set — the actual
-    * certificate ground truth, linear-in-dups tiny — is snapshotted too
-    * (`allpairs-exact`), so certificate RE-runs (threshold sweeps, band
-    * tuning) pay only the banded candidate chain plus a parquet read.
-    * The banded chain keeps its narrow-map signature path. Same oracle
-    * SQL as the recompute twin, so the driver's hash compare IS the
-    * bit-identity proof (the snapshots hold exactly the `sh` and
-    * `apairs` frames the oracle CTEs populate). */
-  val dedupMinhashRecallMaterialized = sql(
-    "dedup_minhash_recall_materialized",
-    s"""WITH $shinglesSql,
-       |$allpairsFromShSqlCte,
-       |$minhashPairsFromShSqlCte,
-       |caught AS (SELECT count(*) AS n_caught
-       |           FROM apairs a JOIN mp USING (da, db)),
-       |tot AS (SELECT count(*) AS n_true FROM apairs),
-       |nc AS (SELECT count(*) AS n_candidates FROM mp)
-       |SELECT CAST(n_true AS BIGINT) AS n_true,
-       |       CAST(n_candidates AS BIGINT) AS n_candidates,
-       |       CAST(n_caught AS BIGINT) AS n_caught,
-       |       round(n_caught * 1.0 / n_true, 4) AS recall
-       |FROM tot CROSS JOIN nc CROSS JOIN caught""".stripMargin) { (s, d) =>
-    val (_, exact) = sharedExactPairs(s, d)
-    val mp = minhashBandPairs(s, d)
-    val caught = exact.join(mp, Seq("da", "db"), "left_semi")
-      .agg(count(lit(1)).as("n_caught"))
-    val tot = exact.agg(count(lit(1)).as("n_true"))
-    val nc = mp.agg(count(lit(1)).as("n_candidates"))
-    tot.crossJoin(broadcast(nc)).crossJoin(broadcast(caught))
-      .select(col("n_true"), col("n_candidates"), col("n_caught"),
-        round(col("n_caught") * lit(1.0) / col("n_true"), 4).as("recall"))
-  }
+  /** Alias of `dedup_minhash_recall`: the same body and oracle under the twin name. */
+  val dedupMinhashRecallMaterialized =
+    dedupMinhashRecall.copy(name = "dedup_minhash_recall_materialized")
 
   /** Spark side of `mp(da, db)`: signatures → band explode → per-bucket
     * size stats → all-pairs for small buckets, star edges for oversized
@@ -1516,37 +1471,9 @@ object TextOps {
         round(col("n_caught") * lit(1.0) / col("n_true"), 4).as("recall"))
   }
 
-  /** The MATERIALIZED twin of `dedup_simhash_recall` — both recall
-    * certificates grade against the SAME AllPairs ground truth, so this
-    * twin reads the `allpairs-exact` snapshot
-    * (`dedup_minhash_recall_materialized` writes it once per application
-    * and corpus; whichever runs first pays the build) and re-runs only
-    * the simhash candidate chain. Same oracle SQL as the recompute twin
-    * → the driver's hash compare is the bit-identity proof. */
-  val dedupSimhashRecallMaterialized = sql(
-    "dedup_simhash_recall_materialized",
-    s"""WITH $shinglesSql,
-       |$allpairsFromShSqlCte,
-       |${simhashPairsSqlWith("sx")},
-       |caught AS (SELECT count(*) AS n_caught
-       |           FROM apairs a JOIN sxpairs p ON p.da = a.da AND p.db = a.db),
-       |tot AS (SELECT count(*) AS n_true FROM apairs),
-       |nc AS (SELECT count(*) AS n_candidates FROM sxpairs)
-       |SELECT CAST(n_true AS BIGINT) AS n_true,
-       |       CAST(n_candidates AS BIGINT) AS n_candidates,
-       |       CAST(n_caught AS BIGINT) AS n_caught,
-       |       round(n_caught * 1.0 / n_true, 4) AS recall
-       |FROM tot CROSS JOIN nc CROSS JOIN caught""".stripMargin) { (s, d) =>
-    val (_, exact) = sharedExactPairs(s, d)
-    val sp = simhashPairsDf(s, d).select("da", "db")
-    val caught = exact.join(sp, Seq("da", "db"), "left_semi")
-      .agg(count(lit(1)).as("n_caught"))
-    val tot = exact.agg(count(lit(1)).as("n_true"))
-    val nc = sp.agg(count(lit(1)).as("n_candidates"))
-    tot.crossJoin(broadcast(nc)).crossJoin(broadcast(caught))
-      .select(col("n_true"), col("n_candidates"), col("n_caught"),
-        round(col("n_caught") * lit(1.0) / col("n_true"), 4).as("recall"))
-  }
+  /** Alias of `dedup_simhash_recall`: the same body and oracle under the twin name. */
+  val dedupSimhashRecallMaterialized =
+    dedupSimhashRecall.copy(name = "dedup_simhash_recall_materialized")
 
   /** Unigram LM quality score — mean surprisal −ln p(tok) under the
     * corpus unigram MLE, the cheap language-model quality proxy used to

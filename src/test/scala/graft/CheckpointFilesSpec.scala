@@ -12,7 +12,7 @@ import graft.core.{CheckpointFiles, NioCheckpointFileManager, Tables}
   * what `localSession` resolves per scheme, and the atomic-publish
   * contract Spark's offset and commit logs and state stores rely on. The
   * checkpoint-restart specs in StreamingSpec run under it unchanged. */
-class CheckpointFilesSpec extends AnyFunSuite {
+class CheckpointFilesSpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = Tables.localSession("checkpoint-files-spec", cores = 2)
 
   def manager(p: Path): CheckpointFileManager =
@@ -28,7 +28,7 @@ class CheckpointFilesSpec extends AnyFunSuite {
   }
 
   test("localSession resolves file: paths to the nio manager, other schemes to Spark's") {
-    val dir = Files.createTempDirectory("ckpt-resolve")
+    val dir = tempDir("ckpt-resolve")
     for (p <- Seq(new Path(dir.toUri), new Path(dir.toString))) {
       val fm = manager(p)
       assert(fm.asInstanceOf[CheckpointFiles].underlying.isInstanceOf[NioCheckpointFileManager])
@@ -39,7 +39,7 @@ class CheckpointFilesSpec extends AnyFunSuite {
   }
 
   test("a published file appears whole on close; until then only a hidden temp exists") {
-    val dir = Files.createTempDirectory("ckpt-publish")
+    val dir = tempDir("ckpt-publish")
     val fm = manager(new Path(dir.toUri))
     val out = fm.createAtomic(new Path(new Path(dir.toUri), "0"), false)
     out.write("offsets".getBytes("UTF-8"))
@@ -54,7 +54,7 @@ class CheckpointFilesSpec extends AnyFunSuite {
   }
 
   test("cancel() leaves no file behind") {
-    val dir = Files.createTempDirectory("ckpt-cancel")
+    val dir = tempDir("ckpt-cancel")
     val out = manager(new Path(dir.toUri)).createAtomic(new Path(new Path(dir.toUri), "1.delta"), true)
     out.write(Array[Byte](1, 2, 3))
     out.cancel()
@@ -63,7 +63,7 @@ class CheckpointFilesSpec extends AnyFunSuite {
   }
 
   test("a no-overwrite create against an existing file fails and keeps the old content") {
-    val dir = Files.createTempDirectory("ckpt-exists")
+    val dir = tempDir("ckpt-exists")
     val fm = manager(new Path(dir.toUri))
     val p = new Path(new Path(dir.toUri), "3")
     write(fm, p, "first", overwrite = false)
@@ -78,7 +78,7 @@ class CheckpointFilesSpec extends AnyFunSuite {
   }
 
   test("temp files never match the batch-file listing") {
-    val dir = Files.createTempDirectory("ckpt-log").resolve("commits")
+    val dir = tempDir("ckpt-log").resolve("commits")
     val log = new CommitLog(spark, dir.toString)
     assert(log.add(0, CommitMetadata()))
     assert(!log.add(0, CommitMetadata()), "a batch is written once")

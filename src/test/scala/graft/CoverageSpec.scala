@@ -70,4 +70,16 @@ class CoverageSpec extends AnyFunSuite {
       s"README says '${m.get.matched}' but the surface is " +
         s"$nOracle oracle-checked + $nRowsOnly rows-only")
   }
+
+  test("each _recall_materialized twin aliases its anchor: same fn, same oracle") {
+    val defs = SparkEntry.allDefs.map(q => q.name -> q).toMap
+    val twins = defs.keySet.filter(_.endsWith("_recall_materialized"))
+    assert(twins == Set("dedup_dfcap_recall_materialized",
+      "dedup_minhash_recall_materialized", "dedup_simhash_recall_materialized"))
+    twins.foreach { twin =>
+      val anchor = defs(twin.stripSuffix("_materialized"))
+      assert(defs(twin).fn eq anchor.fn, s"$twin has its own body")
+      assert(defs(twin).oracle == anchor.oracle, s"$twin has its own oracle")
+    }
+  }
 }

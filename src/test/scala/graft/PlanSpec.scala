@@ -36,6 +36,15 @@ class PlanSpec extends AnyFunSuite {
     if (cut >= 0) plan.substring(0, cut) else plan
   }
 
+  test("ExplainDump dumps the AQE-final plan of the frame it executed") {
+    val plan = graft.dev.ExplainDump.formattedPlan(spark, sf, "q1_agg")
+    val top = """AdaptiveSparkPlan \((\d+)\)""".r.findFirstMatchIn(plan)
+      .getOrElse(fail(s"no top-level AdaptiveSparkPlan in:\n$plan")).group(1)
+    val args = plan.split(s"\n\\($top\\) AdaptiveSparkPlan\n")(1)
+      .linesIterator.find(_.startsWith("Arguments:"))
+    assert(args.contains("Arguments: isFinalPlan=true"), plan)
+  }
+
   test("olap_bucket_join: the bucketed SortMergeJoin consumes the scans " +
       "with zero Exchange below it") {
     val plan = finalPlanSection("olap_bucket_join")

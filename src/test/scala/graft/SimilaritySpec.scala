@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.core.Tables
 import graft.operators.Similarity
 
-class SimilaritySpec extends AnyFunSuite {
+class SimilaritySpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = Tables.localSession("similarity-spec", cores = 8)
   val sf = "/root/testdata/sf0.001"
 
@@ -44,7 +44,7 @@ class SimilaritySpec extends AnyFunSuite {
   /** Planted embeddings table: (vec_id, 64-dim float vector, label). */
   private def writeEmbeddings(rows: Seq[(Long, Array[Float], Int)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("sim-emb").toString
+    val dir = tempDir("sim-emb").toString
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     dir
@@ -339,7 +339,7 @@ class SimilaritySpec extends AnyFunSuite {
       val v = if (bucket(id) < 32768) base else base.map(_ + 1.0f)
       (id, v.toSeq, (id % 10).toInt)
     }
-    val dir = java.nio.file.Files.createTempDirectory("embdrift").toString
+    val dir = tempDir("embdrift").toString
     rows.toDF("vec_id", "embedding", "label")
       .selectExpr("vec_id", "CAST(embedding AS ARRAY<FLOAT>) AS embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")

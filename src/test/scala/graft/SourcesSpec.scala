@@ -12,11 +12,10 @@ import graft.core.Tables
   * strings (S4, dl_k_to_ss.py:66), JSON (S7), parquet write/read, and the
   * group-by-median over the reference-shaped jersey-color fixture (A1).
   */
-class SourcesSpec extends AnyFunSuite {
+class SourcesSpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = Tables.localSession("sources-spec", cores = 4)
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+  private def tmp(prefix: String): String = tempDir(prefix).toString
 
   test("S3: CSV read with header + inferSchema types the 15 int columns") {
     val dir = tmp("csv-inferred")
@@ -127,7 +126,7 @@ class SourcesSpec extends AnyFunSuite {
     // in partition-local seams (Multimodal.*). Fixture: write media blobs
     // as loose files, read back via the built-in binaryFile source.
     import java.nio.file.{Files, Path}
-    val dir = Files.createTempDirectory("binsrc")
+    val dir = tempDir("binsrc")
     val blobs = Map(
       "a.bin" -> Array[Byte](0x50, 0x4b, 3, 4, 9, 9),         // zip magic
       "b.bin" -> Array[Byte](-1, -40, -1, -32, 0, 1, 2, 3, 4)) // jpeg magic

@@ -35,6 +35,23 @@ class TablesSpec extends AnyFunSuite {
         s"$name schema drifted at $sf:\n  got      $got\n  expected $expected")
     }
 
+  test("the shared context carries localSession's one conf set") {
+    val conf = spark.sparkContext.getConf
+    Seq(
+      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "10000000",
+      "spark.sql.streaming.checkpointFileManagerClass" ->
+        classOf[graft.core.CheckpointFiles].getName,
+      "spark.cleaner.periodicGC.interval" -> "30s",
+      "spark.sql.ui.retainedExecutions" -> "8",
+      "spark.ui.retainedJobs" -> "50",
+      "spark.ui.retainedStages" -> "50",
+      "spark.ui.retainedTasks" -> "500"
+    ).foreach { case (k, v) => assert(conf.getOption(k).contains(v), k) }
+    assert(org.apache.logging.log4j.LogManager
+      .getLogger("org.apache.spark.sql.execution.window.WindowExec")
+      .getLevel == org.apache.logging.log4j.Level.ERROR)
+  }
+
   test("region/nation dimension schemas") {
     assertShape("region",
       Map("r_regionkey" -> IntegerType, "r_name" -> StringType))

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, md5}
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,12 +10,12 @@ import graft.operators.TextOps
   * a boilerplate shingle shared by more documents than the cap would form a
   * single quadratic join bucket at 100 TB, so it is excluded from the
   * shingle universe BEFORE the self-join. */
-class TextOpsSpec extends AnyFunSuite {
+class TextOpsSpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = Tables.localSession("textops-spec", cores = 8)
 
   private def writeDocs(rows: Seq[(Long, String)]): String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("textops-docs").toString
+    val dir = tempDir("textops-docs").toString
     rows.toDF("doc_id", "text")
       .selectExpr("doc_id", "text", "'en' AS lang", "'t' AS source",
         "length(text) AS n_chars")
@@ -433,7 +432,7 @@ class TextOpsSpec extends AnyFunSuite {
       val text = if (src == "calm" || cohA) good else bad
       (id, text, "en", src, text.length.toLong)
     }
-    val dir = java.nio.file.Files.createTempDirectory("qdrift").toString
+    val dir = tempDir("qdrift").toString
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = SparkEntry.queries("corpus_quality_drift")(spark, dir).collect()
