@@ -519,45 +519,58 @@ object Jobs {
     * `DataFrame => DataFrame`: the same plan runs in batch or behind a
     * Kafka source/sink. Input needs (`text`, event-time `ts`). */
   def documentIngest(docs: DataFrame, minTokens: Int = 5,
-      delay: String = "10 minutes"): DataFrame = {
-    val toks = size(split(col("text"), " "))
-    val alpha = length(regexp_replace(col("text"), "[^a-zA-Z]", "")) * 1.0 >=
-      length(col("text")) * 0.5
-    docs.filter(toks >= minTokens && alpha)
+      delay: String = "10 minutes"): DataFrame =
+    qualityGate(docs, minTokens)
       .transform(streamingDedup(_, "text", "ts", delay))
-      .withColumn("n_tokens", toks)
-  }
+      .withColumn("n_tokens", tokenCount)
+
+  private def tokenCount: Column = size(split(col("text"), " "))
+
+  /** The stateless quality gate: at least `minTokens` space-split tokens
+    * and at least half the characters alphabetic. */
+  private def qualityGate(docs: DataFrame, minTokens: Int): DataFrame =
+    docs.filter(tokenCount >= minTokens &&
+      length(regexp_replace(col("text"), "[^a-zA-Z]", "")) * 1.0 >=
+        length(col("text")) * 0.5)
 
   /** STREAMING DECONTAMINATION GATE: drop incoming train documents that
     * share an 8-token shingle with the (static) eval benchmark set — the
     * arrival-time twin of the batch `decontam_ngram` check, so contaminated
-    * crawl pages never even land in the corpus. The eval set is compiled
-    * ONCE into a driver-built bloom filter (benchmark suites are tiny;
-    * `expectedItems` sizes it) and broadcast; each micro-batch then runs a
-    * stateless executor-side filter — no stream-static join, no state
-    * store, no per-batch scan of the eval table. A bloom hit only MIGHT be
-    * contamination (fpp), so the gate is conservative in the safe
-    * direction: it can drop an extra clean doc, never keep a dirty one. */
+    * crawl pages never even land in the corpus.
+    *
+    * The eval set is compiled ONCE, on the driver, into a bloom filter of
+    * its shingle keys ([[contaminationBloom]]; `expectedItems` sizes it)
+    * and broadcast once. Each micro-batch then runs one code-generating
+    * probe per doc ([[graft.functions.ShingleBloomProbe]]) in the map stage
+    * — no stream-static join, no state store, no per-batch scan of the
+    * eval table. A doc with a null text or under 8 tokens has no shingle
+    * and is kept. A bloom hit only MIGHT be contamination (fpp), so the
+    * gate is conservative in the safe direction: it can drop an extra
+    * clean doc, never keep a dirty one. */
   def contaminationGate(docs: DataFrame, evalTexts: DataFrame,
       expectedItems: Long = 1000000L, fpp: Double = 0.01): DataFrame = {
-    // tokenize ONCE into a column, then window over the array — a lambda
-    // that re-splits the text would re-tokenize per shingle (~N splits/doc,
-    // the trap TextOps.shingles documents). Hash is an internal key only.
-    val toks = split(col("text"), " ")
-    val shingleKeys = expr(
-      """transform(sequence(0, size(__toks) - 8),
-        |          i -> xxhash64(concat_ws(' ', slice(__toks, i + 1, 8))))""".stripMargin)
-    val bloom = evalTexts
-      .select(toks.as("__toks"))
-      .filter(size(col("__toks")) >= 8)
-      .select(explode(shingleKeys).as("k"))
-      .stat.bloomFilter("k", expectedItems, fpp)
-    val bloomB = docs.sparkSession.sparkContext.broadcast(bloom)
-    val anyHit = udf((ks: Seq[Long]) =>
-      ks != null && ks.exists(bloomB.value.mightContainLong))
-    docs.withColumn("__toks", toks)
-      .filter(size(col("__toks")) < 8 || !anyHit(shingleKeys))
-      .drop("__toks")
+    val bloom = docs.sparkSession.sparkContext.broadcast(
+      contaminationBloom(evalTexts, expectedItems, fpp))
+    docs.filter(!graft.functions.ShingleHashes.might_contain_shingle(col("text"), bloom))
+  }
+
+  /** The eval set's shingle bloom, built on the driver: the `text` column
+    * is collected and every window key of [[graft.functions.ShingleHashes]]
+    * is put into `BloomFilter.create(expectedItems, fpp)`. Over a local
+    * eval frame this starts no Spark job. The collect holds the eval texts
+    * on the driver once: benchmark suites are tiny relative to a
+    * web-scale train corpus, so this is the MODEL, not the corpus — the
+    * same bound as [[freezeBandIndex]]. */
+  def contaminationBloom(evalTexts: DataFrame, expectedItems: Long,
+      fpp: Double): org.apache.spark.util.sketch.BloomFilter = {
+    val bloom = org.apache.spark.util.sketch.BloomFilter.create(expectedItems, fpp)
+    evalTexts.select("text").collect().foreach { r =>
+      if (!r.isNullAt(0))
+        graft.functions.ShingleHashes.windowHashes(
+          org.apache.spark.unsafe.types.UTF8String.fromString(r.getString(0)))
+          .foreach(bloom.putLong)
+    }
+    bloom
   }
 
   /** Per-document MinHash band keys as a COLUMN — the ONE streaming-side
@@ -613,19 +626,35 @@ object Jobs {
 
   /** STREAMING CURATION COMPOSITION (pre-budget stages) — the arrival-time
     * twin of the batch `corpus_curation_e2e` chain, composed from the SAME
-    * streaming pieces the batch stages twin individually:
+    * streaming pieces the batch stages twin individually, in this order:
     *
-    *   1. quality gate + watermark-bounded exact dedup ([[documentIngest]] —
-    *      stateless gates first so junk never reaches the state store);
+    *   1. quality gate (the stateless filter of [[documentIngest]]);
     *   2. decontamination ([[contaminationGate]] — broadcast bloom over the
-    *      static eval set, stateless executor-side filter).
+    *      static eval set, one native probe per doc);
+    *   3. content hash `h`, watermark and `dropDuplicatesWithinWatermark`
+    *      ([[streamingDedup]]);
+    *   4. `n_tokens`.
+    *
+    * Both gates run in the map stage, below the dedup's shuffle, so junk
+    * and contaminated docs are never shuffled and never enter the state
+    * store. The output is the dedup-then-decontaminate order's: the
+    * gate's verdict depends on `text` alone and the dedup key is
+    * `md5(text)`, so every copy of a text gets the same verdict; a
+    * contaminated text is dropped whether or not it was seen, and a clean
+    * text meets the same keys in state it met before. One edge differs:
+    * the watermark advances only on docs that pass both gates, so in a
+    * batch whose latest event time belongs to a contaminated doc it
+    * advances less (state is evicted later, fewer late rows are dropped).
+    * Output columns: the input's, then `h`, then `n_tokens`.
     *
     * Pure `DataFrame => DataFrame`: these stages run inside the streaming
     * plan itself. The token-budget stage needs cross-batch state and lives
     * in [[curationSink]]'s foreachBatch. Input needs (doc_id, text, ts). */
   def curationStream(docs: DataFrame, evalTexts: DataFrame,
       minTokens: Int = 5, delay: String = "10 minutes"): DataFrame =
-    contaminationGate(documentIngest(docs, minTokens, delay), evalTexts)
+    contaminationGate(qualityGate(docs, minTokens), evalTexts)
+      .transform(streamingDedup(_, "text", "ts", delay))
+      .withColumn("n_tokens", tokenCount)
 
   /** Freeze a trained DSIR λ table ([[graft.operators.Sampling.dsirLambda]],
     * `(b, lam)` with b ∈ [0, [[graft.operators.Sampling.DsirBuckets]])) into

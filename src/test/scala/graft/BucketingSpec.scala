@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.Tables
@@ -8,14 +7,14 @@ import graft.core.Tables
 /** Bucketing: pre-shuffling both join sides into the same bucket layout
   * makes the fact-fact join shuffle-free — the co-located join strategy the
   * builder prompt calls out for 100 TB repeated joins. */
-class BucketingSpec extends AnyFunSuite {
+class BucketingSpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = Tables.localSession("bucketing-spec", cores = 4)
   val sf = "/root/testdata/sf0.001"
 
   test("bucketed tables join with zero Exchange (co-located join)") {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ path
     try {
-      val base = Files.createTempDirectory("buckets")
+      val base = tempDir("buckets")
       Tables.lineitem(spark, sf)
         .write.option("path", s"$base/li_b").mode("overwrite")
         .bucketBy(8, "l_orderkey").sortBy("l_orderkey").saveAsTable("li_b")

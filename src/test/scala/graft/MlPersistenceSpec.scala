@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.ml.PipelineModel
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,14 +10,14 @@ import graft.ml.QuarterPrediction
   * pipeline (encoder INCLUDED, fixing quirk Q1: the reference persists the
   * unfitted estimator and re-fits per batch) saves and reloads to identical
   * scores. */
-class MlPersistenceSpec extends AnyFunSuite {
+class MlPersistenceSpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = Tables.localSession("ml-persist-spec", cores = 4)
   val sf = "/root/testdata/sf0.001"
 
   test("fitted pipeline save/load round trip scores identically") {
     val df = QuarterPrediction.trainingFrame(spark, sf).cache()
     val model = QuarterPrediction.train(df)
-    val dir = Files.createTempDirectory("qp-model").toString + "/model"
+    val dir = tempDir("qp-model").toString + "/model"
     model.write.overwrite().save(dir)
     val loaded = PipelineModel.load(dir)
     val a = QuarterPrediction.score(model, df)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.Tables
 
-class OlapSpec extends AnyFunSuite {
+class OlapSpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = Tables.localSession("olap-spec", cores = 8)
   val sf = "/root/testdata/sf0.01"
 
@@ -46,7 +46,7 @@ class OlapSpec extends AnyFunSuite {
     // micros-timestamp — pinned here so a regeneration is a no-op (round 5
     // lost 21 queries to exactly that drift)
     for (layout <- Seq("nanos-long", "micros-timestamp")) {
-      val dir = java.nio.file.Files.createTempDirectory(s"asof-$layout").toString
+      val dir = tempDir(s"asof-$layout").toString
       // events for user 1: day 0 noon and day 5 noon
       val evNs = Seq((1L, DayNs / 2, "click", 1.0),
         (1L, 5 * DayNs + DayNs / 2, "click", 2.0))
@@ -88,7 +88,7 @@ class OlapSpec extends AnyFunSuite {
       "global-min funnel in BOTH directions") {
     import spark.implicits._
     val dayNs = 86400L * 1000000000L
-    val dir = java.nio.file.Files.createTempDirectory("funnel-win").toString
+    val dir = tempDir("funnel-win").toString
     // user 1: view BEFORE signup, then view again 2 days after — the
     //   windowed funnel advances (first qualifying view is day 3), the
     //   global-min funnel does NOT (min view day 0 < min signup day 1);
@@ -216,7 +216,7 @@ class OlapSpec extends AnyFunSuite {
 
   test("events_anomaly: exact integer z-test flags the planted outlier day only") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("olap-anomaly").toString
+    val dir = tempDir("olap-anomaly").toString
     val dayNs = 86400L * 1000000000L
     // 10 quiet days at ~1.00/event, one day with a 100x spike
     val rows = (0 until 10).map(i =>
@@ -233,7 +233,7 @@ class OlapSpec extends AnyFunSuite {
 
   test("ml_linreg: a perfect line fits slope exactly with r2 = 1") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("olap-linreg").toString
+    val dir = tempDir("olap-linreg").toString
     // y dollars = 200·x exactly → slope in cents/unit = 20000, r2 = 1;
     // group B is y = 50·x + 10 → slope 5000, intercept 1000 cents, r2 = 1
     val rows = (1 to 40).map(i => ("A", i.toDouble, 200.0 * i)) ++
@@ -261,7 +261,7 @@ class OlapSpec extends AnyFunSuite {
 
   test("events_ewma: constant series is flat; a spike decays by halves") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("olap-ewma").toString
+    val dir = tempDir("olap-ewma").toString
     val dayNs = 86400L * 1000000000L
     // days 0..9 at 1.00/day, day 10 spikes to 128.00, days 11..16 quiet 1.00
     val rows = (0 until 17).map { i =>
@@ -339,7 +339,7 @@ class OlapSpec extends AnyFunSuite {
       val k = if (arms(u)) 20 else 1
       (1 to k).map(j => (u * 1000 + j, j * dayNs, u, "purchase", 1.0, "{}"))
     }
-    val dir = java.nio.file.Files.createTempDirectory("ab-plant").toString
+    val dir = tempDir("ab-plant").toString
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     val r = SparkEntry.queries("events_ab_test")(spark, dir).collect().head
@@ -351,7 +351,7 @@ class OlapSpec extends AnyFunSuite {
     val allRows = (1L to 60L).flatMap { u =>
       (1 to 20).map(j => (u * 1000 + j, j * dayNs, u, "purchase", 1.0, "{}"))
     }
-    val dir2 = java.nio.file.Files.createTempDirectory("ab-degen").toString
+    val dir2 = tempDir("ab-degen").toString
     allRows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir2/events.parquet")
     val r2 = SparkEntry.queries("events_ab_test")(spark, dir2).collect().head
@@ -365,7 +365,7 @@ class OlapSpec extends AnyFunSuite {
     // |A∩B|=50
     val rows = (1L to 100L).map(u => (u, dayNs, u, "click", 1.0, "{}")) ++
       (51L to 150L).map(u => (u + 1000, dayNs, u, "purchase", 1.0, "{}"))
-    val dir = java.nio.file.Files.createTempDirectory("hllint").toString
+    val dir = tempDir("hllint").toString
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     val r = SparkEntry.queries("olap_hll_intersect")(spark, dir).collect().head
@@ -383,7 +383,7 @@ class OlapSpec extends AnyFunSuite {
       (1L, 1L * dayNs, 10L, "A", 1.0, "{}"), (2L, 1L * dayNs, 10L, "B", 1.0, "{}"),
       (3L, 1L * dayNs, 20L, "A", 1.0, "{}"), (4L, 1L * dayNs, 20L, "B", 1.0, "{}"),
       (5L, 1L * dayNs, 30L, "C", 1.0, "{}"))
-    val dir = java.nio.file.Files.createTempDirectory("copmi").toString
+    val dir = tempDir("copmi").toString
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     val got = SparkEntry.queries("events_copmi")(spark, dir).collect()
@@ -419,7 +419,7 @@ class OlapSpec extends AnyFunSuite {
         (1L to (1L << (10 - o))).map(u =>
           (10000L * o + u, o * DayNs + u, u, "view", 1.0))
       }
-    val dir = java.nio.file.Files.createTempDirectory("halflife").toString
+    val dir = tempDir("halflife").toString
     rows.zipWithIndex.map { case ((_, ts, u, t, v), i) => (i.toLong, ts, u, t, v) }
       .toDF("event_id", "ts", "user_id", "event_type", "value")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
@@ -450,7 +450,7 @@ class OlapSpec extends AnyFunSuite {
         (2L * i, 0 * DayNs + i.toLong, u, "view", v),
         (2L * i + 1, 20 * DayNs + i.toLong, u, "purchase", 2 * v))
     }
-    val dir = java.nio.file.Files.createTempDirectory("cuped").toString
+    val dir = tempDir("cuped").toString
     rows.toDF("event_id", "ts", "user_id", "event_type", "value")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     val got = SparkEntry.queries("events_cuped")(spark, dir).collect()
@@ -478,7 +478,7 @@ class OlapSpec extends AnyFunSuite {
   test("olap_snapshot_diff: added/removed/changed/unchanged verdicts and the last-state tie-break") {
     import spark.implicits._
     val DayNs = 86400L * 1000000000L
-    val dir = java.nio.file.Files.createTempDirectory("snapdiff").toString
+    val dir = tempDir("snapdiff").toString
     // (event_id, ts_ns, user_id, type): u1 removed, u2 added, u3 unchanged,
     // u4 changed, u5 added with a same-timestamp tie broken by event_id
     Seq(

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,12 +10,12 @@ import graft.core.Tables
   * filter must prune directories at plan time, and a salted join must be
   * result-identical to the plain join while splitting hot keys.
   */
-class PartitioningSpec extends AnyFunSuite {
+class PartitioningSpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = Tables.localSession("partitioning-spec", cores = 4)
   val sf = "/root/testdata/sf0.001"
 
   test("partitionBy write + filter → partition pruning at the scan") {
-    val dir = Files.createTempDirectory("ev-part").toString
+    val dir = tempDir("ev-part").toString
     Tables.events(spark, sf).drop("ts") // raw ts layout-dependent; canonical cols stay
       .write.mode("overwrite").partitionBy("event_type").parquet(dir)
     val one = spark.read.parquet(dir).filter(col("event_type") === "click")

@@ -8,7 +8,7 @@ import graft.core.Tables
 /** Determinism/stability properties of the hash-gated data-prep operators —
   * the whole point of hash gating over rand(): membership must not move
   * under re-partitioning, re-runs, or subsetting. */
-class SamplingSpec extends AnyFunSuite {
+class SamplingSpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = Tables.localSession("sampling-spec", cores = 8)
   val sf = "/root/testdata/sf0.01"
 
@@ -66,7 +66,6 @@ class SamplingSpec extends AnyFunSuite {
 
   test("decontam_ngram: planted 8-gram overlap across the split boundary is flagged") {
     import spark.implicits._
-    import java.nio.file.Files
     // find one doc id the hash assigns to 'test' and one to 'train'
     // (thresholds from the single source: graft.operators.Sampling)
     def bucket(id: Long): Int = {
@@ -78,7 +77,7 @@ class SamplingSpec extends AnyFunSuite {
     val testId = (0L to 500L).find(bucket(_) >= graft.operators.Sampling.ValThr).get
     val cleanId = (0L to 500L).filter(bucket(_) < graft.operators.Sampling.TrainThr).find(_ != trainId).get
     val overlap = (1 to 8).map(i => s"shared$i").mkString(" ") // one 8-gram
-    val dir = Files.createTempDirectory("decontam-docs").toString
+    val dir = tempDir("decontam-docs").toString
     Seq(
       trainId -> s"$overlap plus unrelated trailing text here",
       testId -> s"completely different prefix then $overlap",
@@ -163,7 +162,7 @@ class SamplingSpec extends AnyFunSuite {
       (0L until 200L).map(i => (i, s"en doc $i", "en")) ++
         (200L until 300L).map(i => (i, s"zh doc $i", "zh")) ++
         (300L until 400L).map(i => (i, s"de doc $i", "de"))
-    val dir = java.nio.file.Files.createTempDirectory("reweight-docs").toString
+    val dir = tempDir("reweight-docs").toString
     rows.toDF("doc_id", "text", "lang")
       .selectExpr("doc_id", "text", "lang", "'t' AS source",
         "length(text) AS n_chars")

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.Tables
@@ -9,7 +8,7 @@ import graft.sources.Shards
 /** Write-side shard management: size bounds hold, partition layout prunes,
   * compaction collapses fragmented outputs — with no data loss in either
   * direction. */
-class ShardsSpec extends AnyFunSuite {
+class ShardsSpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = Tables.localSession("shards-spec", cores = 8)
   val sf = "/root/testdata/sf0.01"
 
@@ -23,7 +22,7 @@ class ShardsSpec extends AnyFunSuite {
 
   test("writeSized: every shard respects the row cap; nothing lost") {
     val docs = Tables.documents(spark, sf) // 500 rows
-    val out = Files.createTempDirectory("shards-sized").toString
+    val out = tempDir("shards-sized").toString
     Shards.writeSized(docs, out, maxRecordsPerFile = 100L)
     val files = parquetFiles(out)
     assert(files.nonEmpty)
@@ -36,7 +35,7 @@ class ShardsSpec extends AnyFunSuite {
 
   test("writeSized: hive partitioning by lang gives readers partition pruning") {
     val docs = Tables.documents(spark, sf)
-    val out = Files.createTempDirectory("shards-part").toString
+    val out = tempDir("shards-part").toString
     Shards.writeSized(docs, out, maxRecordsPerFile = 1000L,
       partitionCols = Seq("lang"))
     val langDirs = new java.io.File(out).listFiles()
@@ -55,10 +54,10 @@ class ShardsSpec extends AnyFunSuite {
 
   test("compact: fragmented output collapses to byte-sized shard count, content preserved") {
     val docs = Tables.documents(spark, sf)
-    val frag = Files.createTempDirectory("shards-frag").toString
+    val frag = tempDir("shards-frag").toString
     docs.repartition(50).write.mode("overwrite").parquet(frag)
     assert(parquetFiles(frag).size == 50)
-    val out = Files.createTempDirectory("shards-compact").toString
+    val out = tempDir("shards-compact").toString
     // target ≈ half the total bytes → expect 2 output partitions
     val totalBytes = parquetFiles(frag).map(_.length).sum
     val n = Shards.compact(spark, frag, out, targetBytes = totalBytes / 2 + 1)
@@ -69,9 +68,9 @@ class ShardsSpec extends AnyFunSuite {
 
   test("compact: partitionCols preserves the hive layout through the rewrite") {
     val docs = Tables.documents(spark, sf)
-    val frag = Files.createTempDirectory("shards-frag-part").toString
+    val frag = tempDir("shards-frag-part").toString
     docs.repartition(20).write.mode("overwrite").partitionBy("lang").parquet(frag)
-    val out = Files.createTempDirectory("shards-compact-part").toString
+    val out = tempDir("shards-compact-part").toString
     Shards.compact(spark, frag, out, targetBytes = Long.MaxValue,
       partitionCols = Seq("lang"))
     val langDirs = new java.io.File(out).listFiles()
