@@ -101,42 +101,41 @@ object PlanBudget {
     finally spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
   }
 
-  /** Parses the budget file as committed ON DISK (the regen diff's "old"
-    * side — the classpath copy in [[load]] can lag a clean rebuild). */
-  private def loadDisk(): Map[String, Counts] = {
-    val p = java.nio.file.Paths.get(BudgetPath)
-    if (!java.nio.file.Files.exists(p)) Map.empty
-    else scala.jdk.CollectionConverters.ListHasAsScala(
-        java.nio.file.Files.readAllLines(p)).asScala
-      .filterNot(l => l.startsWith("#") || l.trim.isEmpty)
-      .map { l =>
-        val Array(n, s, b, so, nl) = l.split('\t')
-        n -> Counts(s.toInt, b.toInt, so.toInt, nl.toInt)
-      }.toMap
+  /** Data rows of a committed TSV, split on tabs: from the test classpath,
+    * or `onDisk` as committed in the source tree (the regen diff's "old"
+    * side — the classpath copy can lag a clean rebuild; a missing file
+    * there reads as no rows). */
+  private def tsvRows(path: String, onDisk: Boolean): Seq[Array[String]] = {
+    val p = java.nio.file.Paths.get(path)
+    val lines: Seq[String] =
+      if (onDisk) {
+        if (!java.nio.file.Files.exists(p)) Nil
+        else java.nio.file.Files.readString(p).linesIterator.toList
+      } else {
+        val in = getClass.getClassLoader.getResourceAsStream(p.getFileName.toString)
+        require(in != null, s"${p.getFileName} missing from test resources — run: sbt 'runMain graft.dev.PlanBudget'")
+        val src = scala.io.Source.fromInputStream(in, "UTF-8")
+        try src.getLines().toList finally src.close()
+      }
+    lines.filterNot(l => l.startsWith("#") || l.trim.isEmpty).map(_.split('\t'))
   }
 
-  private def parseAuditLines(lines: Iterator[String]): Map[String, Seq[String]] =
-    lines.filterNot(l => l.startsWith("#") || l.trim.isEmpty)
-      .map { l =>
-        val parts = l.split('\t')
-        parts(0) -> (if (parts.length > 1) parts(1).split(',').toSeq else Seq.empty)
-      }.toMap
+  private def committedBudget(onDisk: Boolean): Map[String, Counts] =
+    tsvRows(BudgetPath, onDisk).map { case Array(n, s, b, so, nl) =>
+      n -> Counts(s.toInt, b.toInt, so.toInt, nl.toInt)
+    }.toMap
 
-  private def loadAuditDisk(): Map[String, Seq[String]] = {
-    val p = java.nio.file.Paths.get(AuditPath)
-    if (!java.nio.file.Files.exists(p)) Map.empty
-    else parseAuditLines(scala.jdk.CollectionConverters.ListHasAsScala(
-      java.nio.file.Files.readAllLines(p)).asScala.iterator)
-  }
+  /** Queries with NO object-hash aggregate carry no row. */
+  private def committedAudit(onDisk: Boolean): Map[String, Seq[String]] =
+    tsvRows(AuditPath, onDisk).map { parts =>
+      parts(0) -> (if (parts.length > 1) parts(1).split(',').toSeq else Seq.empty)
+    }.toMap
 
-  /** Parses the committed object-hash audit (from the test classpath).
-    * Queries with NO object-hash aggregate carry no row. */
-  def loadAudit(): Map[String, Seq[String]] = {
-    val in = getClass.getClassLoader.getResourceAsStream("object_hash_audit.tsv")
-    require(in != null, s"object_hash_audit.tsv missing from test resources — run: sbt 'runMain graft.dev.PlanBudget'")
-    val src = scala.io.Source.fromInputStream(in, "UTF-8")
-    try parseAuditLines(src.getLines()) finally src.close()
-  }
+  /** Parses the committed budget file (from the test classpath). */
+  def load(): Map[String, Counts] = committedBudget(onDisk = false)
+
+  /** Parses the committed object-hash audit (from the test classpath). */
+  def loadAudit(): Map[String, Seq[String]] = committedAudit(onDisk = false)
 
   /** Regenerate the committed budget — and print the old→new rows for
     * exactly the drifted queries (round-10 VERDICT #6: an intentional
@@ -148,7 +147,7 @@ object PlanBudget {
     val diffOnly = args.contains("--diff")
     val spark = graft.core.Tables.localSession("plan-budget", cores = 8)
     val rows = measure(spark)
-    val old = loadDisk()
+    val old = committedBudget(onDisk = true)
     val drifted = rows.filter { case (n, c, _) => !old.get(n).contains(c) }
     val removed = (old.keySet -- rows.map(_._1)).toSeq.sorted
     if (drifted.isEmpty && removed.isEmpty)
@@ -163,7 +162,7 @@ object PlanBudget {
         println(s"  $n: ${old(n).tsv.replace('\t', '/')} -> REMOVED"))
     }
     // object-hash audit drift, same discipline
-    val oldAudit = loadAuditDisk()
+    val oldAudit = committedAudit(onDisk = true)
     val auditRows = rows.collect { case (n, _, fns) if fns.nonEmpty => n -> fns }
     val auditDrift = auditRows.filter { case (n, fns) => !oldAudit.get(n).contains(fns) } ++
       (oldAudit.keySet -- auditRows.map(_._1)).toSeq.sorted.map(n => n -> Seq("REMOVED"))
@@ -215,19 +214,5 @@ object PlanBudget {
     spark.stop()
     if (diffOnly && (drifted.nonEmpty || removed.nonEmpty || auditDrift.nonEmpty))
       sys.exit(1)
-  }
-
-  /** Parses the committed budget file (from the test classpath). */
-  def load(): Map[String, Counts] = {
-    val in = getClass.getClassLoader.getResourceAsStream("plan_budget.tsv")
-    require(in != null, s"plan_budget.tsv missing from test resources — run: sbt 'runMain graft.dev.PlanBudget'")
-    val src = scala.io.Source.fromInputStream(in, "UTF-8")
-    try src.getLines()
-      .filterNot(l => l.startsWith("#") || l.trim.isEmpty)
-      .map { l =>
-        val Array(n, s, b, so, nl) = l.split('\t')
-        n -> Counts(s.toInt, b.toInt, so.toInt, nl.toInt)
-      }.toMap
-    finally src.close()
   }
 }

@@ -71,8 +71,9 @@ object ScaleProbe {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     val spark = graft.core.Tables.localSession("scale-probe", cores = 32)
 
-    // dev-only probe subset (comma-separated names; full runs never set it)
-    val onlyProbes = sys.env.get("SPARK_GRAFT_PROBES")
+    // dev-only probe subset, the same filter Bench and Verify read
+    // (comma-separated names; full runs never set it)
+    val onlyProbes = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
     val probes = Probes.filter(n => onlyProbes.forall(_.contains(n)))
 

@@ -1295,8 +1295,6 @@ object TextOps {
         .filter(col("cluster") =!= col("prev")).count()
       labels = next
       rounds += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(s"[cc] round=$rounds changed=$changed")
     }
     edges.unpersist()
     // Never return silently-non-minimal labels: pointer jumping converges in

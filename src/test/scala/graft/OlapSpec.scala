@@ -111,8 +111,8 @@ class OlapSpec extends AnyFunSuite with TempDirs {
     // user-by-user to pin which side advanced whom
     def oneUser(u: Long, q: String): Long = {
       rows.filter(_._3 == u).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        .write.mode("overwrite").parquet(s"$dir-u$u/events.parquet")
-      SparkEntry.queries(q)(spark, s"$dir-u$u").collect().head.getAs[Long]("n_view")
+        .write.mode("overwrite").parquet(s"$dir/u$u/events.parquet")
+      SparkEntry.queries(q)(spark, s"$dir/u$u").collect().head.getAs[Long]("n_view")
     }
     assert(oneUser(1L, "events_funnel_windowed") == 1 && oneUser(1L, "events_funnel") == 0)
     assert(oneUser(2L, "events_funnel_windowed") == 0 && oneUser(2L, "events_funnel") == 1)

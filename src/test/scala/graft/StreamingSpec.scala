@@ -9,7 +9,7 @@ import graft.core.Tables
 import graft.ml.QuarterPrediction
 import graft.streaming.Jobs
 
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = Tables.localSession("streaming-spec", cores = 8)
   val sf = "/root/testdata/sf0.001"
 
@@ -63,17 +63,15 @@ class StreamingSpec extends AnyFunSuite {
     // directory; t_us/ts_micros re-derived by the SAME canonicalization the
     // batch loader uses, whichever ts layout the file has)
     import java.nio.file.{Files, Path}
-    val dir = Files.createTempDirectory("evstream")
-    try {
-      Files.copy(Path.of(s"$sf/events.parquet"), dir.resolve("events.parquet"))
-      val streamed = spark.readStream
-        .schema(events.drop("ts_micros", "t_us").schema)
-        .parquet(dir.toString)
-        .transform(Tables.canonicalEventTime)
-        .transform(Jobs.windowedEventCounts)
-      val got = Jobs.runToMemory(spark, streamed, "win_stream", OutputMode.Complete)
-      assert(got.count() == out.count())
-    } finally deleteTrees(dir)
+    val dir = tempDir("evstream")
+    Files.copy(Path.of(s"$sf/events.parquet"), dir.resolve("events.parquet"))
+    val streamed = spark.readStream
+      .schema(events.drop("ts_micros", "t_us").schema)
+      .parquet(dir.toString)
+      .transform(Tables.canonicalEventTime)
+      .transform(Jobs.windowedEventCounts)
+    val got = Jobs.runToMemory(spark, streamed, "win_stream", OutputMode.Complete)
+    assert(got.count() == out.count())
   }
 
   test("streaming trending top-k: sketch ranks inside windows, batch ≡ stream") {
@@ -138,37 +136,35 @@ class StreamingSpec extends AnyFunSuite {
     // (operator state recovered) — the exactly-once story a 100 TB
     // streaming job stands on
     import java.nio.file.Files
-    val in = Files.createTempDirectory("ckpt_in")
-    val out = Files.createTempDirectory("ckpt_out")
-    val ckpt = Files.createTempDirectory("ckpt_meta")
-    try {
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType)))
-      def runOnce(): Unit = {
-        val q = Jobs.streamingDedupUnbounded(
-          spark.readStream.schema(schema).json(in.toString), "text")
-          .writeStream.format("parquet")
-          .option("path", out.toString)
-          .option("checkpointLocation", ckpt.toString)
-          .outputMode("append").start()
-        q.processAllAvailable(); q.stop()
-      }
-      Files.writeString(in.resolve("b1.json"),
-        """{"id":1,"text":"alpha"}""" + "\n" + """{"id":2,"text":"beta"}""" + "\n")
-      runOnce()
-      // "alpha" repeats ACROSS the restart; "gamma" is new
-      Files.writeString(in.resolve("b2.json"),
-        """{"id":3,"text":"alpha"}""" + "\n" + """{"id":4,"text":"gamma"}""" + "\n")
-      runOnce()
-      val texts = spark.read.schema(schema.add("h",
-        org.apache.spark.sql.types.StringType)).parquet(out.toString)
-        .select("text").collect().map(_.getString(0)).sorted.toSeq
-      assert(texts == Seq("alpha", "beta", "gamma"),
-        s"restart must neither replay batch 1 nor forget its dedup state: $texts")
-    } finally deleteTrees(in, out, ckpt)
+    val in = tempDir("ckpt_in")
+    val out = tempDir("ckpt_out")
+    val ckpt = tempDir("ckpt_meta")
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("id",
+        org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("text",
+        org.apache.spark.sql.types.StringType)))
+    def runOnce(): Unit = {
+      val q = Jobs.streamingDedupUnbounded(
+        spark.readStream.schema(schema).json(in.toString), "text")
+        .writeStream.format("parquet")
+        .option("path", out.toString)
+        .option("checkpointLocation", ckpt.toString)
+        .outputMode("append").start()
+      q.processAllAvailable(); q.stop()
+    }
+    Files.writeString(in.resolve("b1.json"),
+      """{"id":1,"text":"alpha"}""" + "\n" + """{"id":2,"text":"beta"}""" + "\n")
+    runOnce()
+    // "alpha" repeats ACROSS the restart; "gamma" is new
+    Files.writeString(in.resolve("b2.json"),
+      """{"id":3,"text":"alpha"}""" + "\n" + """{"id":4,"text":"gamma"}""" + "\n")
+    runOnce()
+    val texts = spark.read.schema(schema.add("h",
+      org.apache.spark.sql.types.StringType)).parquet(out.toString)
+      .select("text").collect().map(_.getString(0)).sorted.toSeq
+    assert(texts == Seq("alpha", "beta", "gamma"),
+      s"restart must neither replay batch 1 nor forget its dedup state: $texts")
   }
 
   test("funnelSteps checkpoint recovery: a restarted query keeps funnel positions") {
@@ -177,48 +173,46 @@ class StreamingSpec extends AnyFunSuite {
     // must advance from RECOVERED step-1 state (not re-emit step 1, not
     // reset to step 0), and the pre-restart hit must not be replayed
     import java.nio.file.Files
-    val in = Files.createTempDirectory("fun_in")
-    val out = Files.createTempDirectory("fun_out")
-    val ckpt = Files.createTempDirectory("fun_ckpt")
-    try {
-      val schema = org.apache.spark.sql.types.StructType(Seq(
+    val in = tempDir("fun_in")
+    val out = tempDir("fun_out")
+    val ckpt = tempDir("fun_ckpt")
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("userId",
+        org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("tsMicros",
+        org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("eventType",
+        org.apache.spark.sql.types.StringType)))
+    import spark.implicits._
+    def runOnce(): Unit = {
+      val q = Jobs.funnelSteps(
+        spark.readStream.schema(schema).json(in.toString).as[Jobs.FunnelEvent])
+        .writeStream.format("parquet")
+        .option("path", out.toString)
+        .option("checkpointLocation", ckpt.toString)
+        .outputMode("append").start()
+      q.processAllAvailable(); q.stop()
+    }
+    val t0 = 1700000000000000L
+    val hour = 3600L * 1000000
+    Files.writeString(in.resolve("b1.json"),
+      s"""{"userId":7,"tsMicros":$t0,"eventType":"signup"}""" + "\n")
+    runOnce()
+    Files.writeString(in.resolve("b2.json"),
+      s"""{"userId":7,"tsMicros":${t0 + hour},"eventType":"view"}""" + "\n" +
+      s"""{"userId":7,"tsMicros":${t0 + 2 * hour},"eventType":"click"}""" + "\n")
+    runOnce()
+    val hits = spark.read.schema(org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("userId",
           org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("step",
+          org.apache.spark.sql.types.IntegerType),
         org.apache.spark.sql.types.StructField("tsMicros",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("eventType",
-          org.apache.spark.sql.types.StringType)))
-      import spark.implicits._
-      def runOnce(): Unit = {
-        val q = Jobs.funnelSteps(
-          spark.readStream.schema(schema).json(in.toString).as[Jobs.FunnelEvent])
-          .writeStream.format("parquet")
-          .option("path", out.toString)
-          .option("checkpointLocation", ckpt.toString)
-          .outputMode("append").start()
-        q.processAllAvailable(); q.stop()
-      }
-      val t0 = 1700000000000000L
-      val hour = 3600L * 1000000
-      Files.writeString(in.resolve("b1.json"),
-        s"""{"userId":7,"tsMicros":$t0,"eventType":"signup"}""" + "\n")
-      runOnce()
-      Files.writeString(in.resolve("b2.json"),
-        s"""{"userId":7,"tsMicros":${t0 + hour},"eventType":"view"}""" + "\n" +
-        s"""{"userId":7,"tsMicros":${t0 + 2 * hour},"eventType":"click"}""" + "\n")
-      runOnce()
-      val hits = spark.read.schema(org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("userId",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("step",
-            org.apache.spark.sql.types.IntegerType),
-          org.apache.spark.sql.types.StructField("tsMicros",
-            org.apache.spark.sql.types.LongType))))
-        .parquet(out.toString).collect()
-        .map(r => (r.getInt(1), r.getLong(2))).sortBy(_._1).toSeq
-      assert(hits == Seq((1, t0), (2, t0 + hour), (3, t0 + 2 * hour)),
-        s"restart must resume from recovered step-1 state, exactly-once: $hits")
-    } finally deleteTrees(in, out, ckpt)
+          org.apache.spark.sql.types.LongType))))
+      .parquet(out.toString).collect()
+      .map(r => (r.getInt(1), r.getLong(2))).sortBy(_._1).toSeq
+    assert(hits == Seq((1, t0), (2, t0 + hour), (3, t0 + 2 * hour)),
+      s"restart must resume from recovered step-1 state, exactly-once: $hits")
   }
 
   test("streaming dedup drops repeated payloads across micro-batches") {
@@ -517,27 +511,25 @@ class StreamingSpec extends AnyFunSuite {
   test("idempotent foreachBatch sink: batch replay never duplicates rows") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("idem-sink")
-    try {
-      val data = s"$dir/data"
-      // streaming path: two batches land in their own partitions
-      val mem = MemoryStream[(Long, String)]
-      val q = Jobs.idempotentParquetSink(
-        mem.toDF().toDF("id", "value"), data, s"$dir/ckpt").start()
-      mem.addData((1L, "a"), (2L, "b"))
-      q.processAllAvailable()
-      mem.addData((3L, "c"))
-      q.processAllAvailable()
-      q.stop()
-      assert(spark.read.parquet(data).count() == 3)
-      // crash-replay simulation: re-writing batch 1 (as the checkpoint would
-      // after a failure between write and commit) must be a no-op overwrite
-      Jobs.writeBatchIdempotent(Seq((3L, "c")).toDF("id", "value"), 1L, data)
-      Jobs.writeBatchIdempotent(Seq((3L, "c")).toDF("id", "value"), 1L, data)
-      val after = spark.read.parquet(data)
-      assert(after.count() == 3, s"replay duplicated rows: ${after.collect().toSeq}")
-      assert(after.filter(col("batch_id") === 0).count() == 2, "other batches untouched")
-    } finally deleteTrees(dir)
+    val dir = tempDir("idem-sink")
+    val data = s"$dir/data"
+    // streaming path: two batches land in their own partitions
+    val mem = MemoryStream[(Long, String)]
+    val q = Jobs.idempotentParquetSink(
+      mem.toDF().toDF("id", "value"), data, s"$dir/ckpt").start()
+    mem.addData((1L, "a"), (2L, "b"))
+    q.processAllAvailable()
+    mem.addData((3L, "c"))
+    q.processAllAvailable()
+    q.stop()
+    assert(spark.read.parquet(data).count() == 3)
+    // crash-replay simulation: re-writing batch 1 (as the checkpoint would
+    // after a failure between write and commit) must be a no-op overwrite
+    Jobs.writeBatchIdempotent(Seq((3L, "c")).toDF("id", "value"), 1L, data)
+    Jobs.writeBatchIdempotent(Seq((3L, "c")).toDF("id", "value"), 1L, data)
+    val after = spark.read.parquet(data)
+    assert(after.count() == 3, s"replay duplicated rows: ${after.collect().toSeq}")
+    assert(after.filter(col("batch_id") === 0).count() == 2, "other batches untouched")
   }
 
   test("transformWithState: per-source running ingest stats across micro-batches") {
@@ -657,20 +649,18 @@ class StreamingSpec extends AnyFunSuite {
     val shaped = mem.toDF().toDF("doc_id", "text", "us")
       .withColumn("ts", timestamp_micros($"us"))
     val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-    val ckpt = java.nio.file.Files.createTempDirectory("curation-ckpt").toString
-    try {
-      val q = Jobs.curationSink(Jobs.curationStream(shaped, evalSet), budget) {
-        (sel, _) =>
-          got ++= sel.select("doc_id", "n_tokens", "cum_tokens").collect()
-            .map(r => (r.getLong(0), r.getAs[Number](1).longValue(), r.getLong(2)))
-          ()
-      }.option("checkpointLocation", ckpt).start()
-      docs.foreach { b =>
-        mem.addData(b.map { case (id, t) => (id, t, t0) }: _*)
-        q.processAllAvailable()
-      }
-      q.stop()
-    } finally deleteTrees(java.nio.file.Path.of(ckpt))
+    val ckpt = tempDir("curation-ckpt").toString
+    val q = Jobs.curationSink(Jobs.curationStream(shaped, evalSet), budget) {
+      (sel, _) =>
+        got ++= sel.select("doc_id", "n_tokens", "cum_tokens").collect()
+          .map(r => (r.getLong(0), r.getAs[Number](1).longValue(), r.getLong(2)))
+        ()
+    }.option("checkpointLocation", ckpt).start()
+    docs.foreach { b =>
+      mem.addData(b.map { case (id, t) => (id, t, t0) }: _*)
+      q.processAllAvailable()
+    }
+    q.stop()
 
     // --- batch chain of the SAME stage definitions
     val all = docs.flatten.toDF("doc_id", "text")
@@ -706,50 +696,48 @@ class StreamingSpec extends AnyFunSuite {
     // and prove batch 2's selection uses batch 1's RECOVERED running total
     // — a reset-to-zero counter would wrongly select both batch-2 docs
     import java.nio.file.Files
-    val in = Files.createTempDirectory("cur_in")
-    val ckpt = Files.createTempDirectory("cur_ckpt")
-    val state = Files.createTempDirectory("cur_state")
-    try {
-      val evalSet = {
-        import spark.implicits._
-        Seq((1 to 9).map(i => s"bench$i").mkString(" ")).toDF("text")
-      }
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("us",
-          org.apache.spark.sql.types.LongType)))
-      val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-      def runOnce(): Unit = {
-        val shaped = spark.readStream.schema(schema).json(in.toString)
-          .withColumn("ts", timestamp_micros(col("us")))
-        val q = Jobs.curationSink(
-          Jobs.curationStream(shaped, evalSet), budget = 45L,
-          stateDir = Some(state.toString)) { (sel, _) =>
-          got ++= sel.select("doc_id", "cum_tokens").collect()
-            .map(r => (r.getLong(0), r.getLong(1)))
-          ()
-        }.option("checkpointLocation", ckpt.toString).start()
-        q.processAllAvailable(); q.stop()
-      }
-      val t0 = 1700000000000000L
-      def doc(id: Long, p: String, n: Int) =
-        s"""{"doc_id":$id,"text":"${(1 to n).map(i => s"$p$i").mkString(" ")}","us":$t0}"""
-      // batch 1: 30 survivor tokens → counter must land at 30
-      Files.writeString(in.resolve("b1.json"),
-        doc(1, "alpha", 12) + "\n" + doc(2, "beta", 18) + "\n")
-      runOnce()
-      // restart; batch 2: 10-token doc fits (cum 40 ≤ 45), 8-token doesn't
-      // (cum 48) — iff the 30 was recovered
-      Files.writeString(in.resolve("b2.json"),
-        doc(3, "gamma", 10) + "\n" + doc(4, "delta", 8) + "\n")
-      runOnce()
-      assert(got.toSet == Set((1L, 12L), (2L, 30L), (3L, 40L)),
-        s"restart must resume the 30-token ledger (4 rejected at cum 48): " +
-          s"${got.toSet}")
-    } finally deleteTrees(in, ckpt, state)
+    val in = tempDir("cur_in")
+    val ckpt = tempDir("cur_ckpt")
+    val state = tempDir("cur_state")
+    val evalSet = {
+      import spark.implicits._
+      Seq((1 to 9).map(i => s"bench$i").mkString(" ")).toDF("text")
+    }
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("doc_id",
+        org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("text",
+        org.apache.spark.sql.types.StringType),
+      org.apache.spark.sql.types.StructField("us",
+        org.apache.spark.sql.types.LongType)))
+    val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+    def runOnce(): Unit = {
+      val shaped = spark.readStream.schema(schema).json(in.toString)
+        .withColumn("ts", timestamp_micros(col("us")))
+      val q = Jobs.curationSink(
+        Jobs.curationStream(shaped, evalSet), budget = 45L,
+        stateDir = Some(state.toString)) { (sel, _) =>
+        got ++= sel.select("doc_id", "cum_tokens").collect()
+          .map(r => (r.getLong(0), r.getLong(1)))
+        ()
+      }.option("checkpointLocation", ckpt.toString).start()
+      q.processAllAvailable(); q.stop()
+    }
+    val t0 = 1700000000000000L
+    def doc(id: Long, p: String, n: Int) =
+      s"""{"doc_id":$id,"text":"${(1 to n).map(i => s"$p$i").mkString(" ")}","us":$t0}"""
+    // batch 1: 30 survivor tokens → counter must land at 30
+    Files.writeString(in.resolve("b1.json"),
+      doc(1, "alpha", 12) + "\n" + doc(2, "beta", 18) + "\n")
+    runOnce()
+    // restart; batch 2: 10-token doc fits (cum 40 ≤ 45), 8-token doesn't
+    // (cum 48) — iff the 30 was recovered
+    Files.writeString(in.resolve("b2.json"),
+      doc(3, "gamma", 10) + "\n" + doc(4, "delta", 8) + "\n")
+    runOnce()
+    assert(got.toSet == Set((1L, 12L), (2L, 30L), (3L, 40L)),
+      s"restart must resume the 30-token ledger (4 rejected at cum 48): " +
+        s"${got.toSet}")
   }
 
   test("curationSink runs each data trigger as ONE Spark job and caches nothing") {
@@ -785,7 +773,7 @@ class StreamingSpec extends AnyFunSuite {
     }
     val cachedDuringEmit = new java.util.concurrent.atomic.AtomicInteger
     val emitted = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val ckpt = java.nio.file.Files.createTempDirectory("curation-jobs")
+    val ckpt = tempDir("curation-jobs")
     spark.sparkContext.addSparkListener(listener)
     try {
       val q = Jobs.curationSink(Jobs.curationStream(shaped, evalSet),
@@ -821,10 +809,7 @@ class StreamingSpec extends AnyFunSuite {
       assert(jobs.values.forall(_ == 1), s"a trigger ran more than one job: $jobs")
       assert(cachedDuringEmit.get == 0, "the emitted selection read a cached frame")
       assert(emitted.sorted == (0 until 4).flatMap(b => (0 until 5).map(b * 10L + _)))
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      deleteTrees(ckpt)
-    }
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("curationSink replay: a batch re-run after a crash reuses its ledger base") {
@@ -836,9 +821,9 @@ class StreamingSpec extends AnyFunSuite {
     // last batch and the one whose commit is lost.
     import java.nio.file.Files
     spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val in = Files.createTempDirectory("cur_replay_in")
-    val ckpt = Files.createTempDirectory("cur_replay_ckpt")
-    val state = Files.createTempDirectory("cur_replay_state")
+    val in = tempDir("cur_replay_in")
+    val ckpt = tempDir("cur_replay_ckpt")
+    val state = tempDir("cur_replay_state")
     try {
       val evalSet = {
         import spark.implicits._
@@ -880,10 +865,7 @@ class StreamingSpec extends AnyFunSuite {
       def entry(id: Int) = Files.readString(state.resolve(f"batch-$id%012d")).trim
       assert(entry(0) == "0 30" && entry(1) == "30 18",
         s"ledger: ${entry(0)} / ${entry(1)}")
-    } finally {
-      spark.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
-      deleteTrees(in, ckpt, state)
-    }
+    } finally spark.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
   }
 
   test("curationSink seeding ignores a stray tmp- file in the state dir") {
@@ -893,30 +875,28 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sq = spark.sqlContext
     import java.nio.file.Files
-    val ckpt = Files.createTempDirectory("cur_tmp_ckpt")
-    val state = Files.createTempDirectory("cur_tmp_state")
+    val ckpt = tempDir("cur_tmp_ckpt")
+    val state = tempDir("cur_tmp_state")
+    Files.writeString(state.resolve("tmp-12345"), "1000 1000")
+    val evalSet = Seq((1 to 9).map(i => s"bench$i").mkString(" ")).toDF("text")
+    val mem = MemoryStream[(Long, String, Long)]
+    val shaped = mem.toDF().toDF("doc_id", "text", "us")
+      .withColumn("ts", timestamp_micros($"us"))
+    val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+    val q = Jobs.curationSink(Jobs.curationStream(shaped, evalSet),
+        budget = 45L, stateDir = Some(state.toString)) { (sel, _) =>
+      got ++= sel.select("doc_id", "cum_tokens").collect()
+        .map(r => (r.getLong(0), r.getLong(1)))
+      ()
+    }.option("checkpointLocation", ckpt.toString).start()
     try {
-      Files.writeString(state.resolve("tmp-12345"), "1000 1000")
-      val evalSet = Seq((1 to 9).map(i => s"bench$i").mkString(" ")).toDF("text")
-      val mem = MemoryStream[(Long, String, Long)]
-      val shaped = mem.toDF().toDF("doc_id", "text", "us")
-        .withColumn("ts", timestamp_micros($"us"))
-      val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-      val q = Jobs.curationSink(Jobs.curationStream(shaped, evalSet),
-          budget = 45L, stateDir = Some(state.toString)) { (sel, _) =>
-        got ++= sel.select("doc_id", "cum_tokens").collect()
-          .map(r => (r.getLong(0), r.getLong(1)))
-        ()
-      }.option("checkpointLocation", ckpt.toString).start()
-      try {
-        def words(p: String, n: Int) = (1 to n).map(i => s"$p$i").mkString(" ")
-        mem.addData((1L, words("alpha", 12), 1700000000000000L),
-          (2L, words("beta", 18), 1700000000000000L))
-        q.processAllAvailable()
-      } finally q.stop()
-      assert(got.toSet == Set((1L, 12L), (2L, 30L)), s"seeded from the tmp file: $got")
-      assert(Files.readString(state.resolve("batch-000000000000")).trim == "0 30")
-    } finally deleteTrees(ckpt, state)
+      def words(p: String, n: Int) = (1 to n).map(i => s"$p$i").mkString(" ")
+      mem.addData((1L, words("alpha", 12), 1700000000000000L),
+        (2L, words("beta", 18), 1700000000000000L))
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(got.toSet == Set((1L, 12L), (2L, 30L)), s"seeded from the tmp file: $got")
+    assert(Files.readString(state.resolve("batch-000000000000")).trim == "0 30")
   }
 
   test("anomalyAlerts: online z-alerts match the batch prior-window replay exactly") {
@@ -1178,7 +1158,4 @@ class StreamingSpec extends AnyFunSuite {
         s"missing ${(want diff got.toSet).take(3)}")
     assert(want.size >= 10, s"fixture too small to prove parity: ${want.size} rows")
   }
-
-  private def deleteTrees(dirs: java.nio.file.Path*): Unit =
-    dirs.foreach(graft.core.NioCheckpointFileManager.deleteTree)
 }
