@@ -168,10 +168,8 @@ object QuarterPrediction {
     * and the training frame is deterministic per sfDir, so a persisted
     * compilation is byte-identical to a fresh one for the same sfDir
     * AND the same trainer — a pure cache keyed by the full (sanitized)
-    * sfDir path plus [[TrainerLayoutVersion]]. Overridable for test
-    * isolation. */
-  private def persistRoot: String =
-    sys.env.getOrElse("GRAFT_ML_STATE", "ml-state")
+    * sfDir path plus [[TrainerLayoutVersion]]. */
+  private val persistRoot = "ml-state"
 
   /** Version stamp of everything the fitted forest depends on: the
     * key-sample rule, the repartition/sort layout pin, the seed, and the

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import graft.core.{QueryDef, Tables}
+import graft.core.{QueryDef, Snapshots, Tables}
 import graft.core.QueryDef.sql
 
 /** OLAP surface beyond the reference's own operators (SURVEY §2.5 notes
@@ -1864,27 +1864,24 @@ object Olap {
   }
 
   /** Bucketed catalog twins of (lineitem, orders), materialized ONCE per
-    * (application, dataset) — `bucketBy(8, orderkey).sortBy(orderkey)`
-    * into managed tables, the layout investment a 100 TB deployment makes
-    * when a fact-fact join runs repeatedly. 8 buckets is the local-test
-    * knob; at scale it is thousands (≈ one bucket per target task). */
-  private val bucketCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), (String, String)]()
+    * (application, dataset) in [[graft.core.Snapshots]] —
+    * `bucketBy(8, orderkey).sortBy(orderkey)` into managed tables, the
+    * layout investment a 100 TB deployment makes when a fact-fact join
+    * runs repeatedly. 8 buckets is the local-test knob; at scale it is
+    * thousands (≈ one bucket per target task). */
   private def bucketedTables(s: org.apache.spark.sql.SparkSession, d: String)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    val (liT, oT) = bucketCache.computeIfAbsent(
-      (s.sparkContext.applicationId, d), { _ =>
-        val tag = java.util.UUID.randomUUID().toString.take(8).replace("-", "")
-        val base = java.nio.file.Files.createTempDirectory("bucket-join")
-        val li = s"li_bkt_$tag"; val o = s"o_bkt_$tag"
-        Tables.lineitem(s, d).write.option("path", s"$base/$li")
-          .mode("overwrite").bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-          .saveAsTable(li)
-        Tables.orders(s, d).write.option("path", s"$base/$o")
-          .mode("overwrite").bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-          .saveAsTable(o)
-        (li, o)
-      })
+    val (liT, oT) = Snapshots.once(s, d, "bucket-join") { base =>
+      val tag = java.util.UUID.randomUUID().toString.take(8).replace("-", "")
+      val li = s"li_bkt_$tag"; val o = s"o_bkt_$tag"
+      Tables.lineitem(s, d).write.option("path", s"$base/$li")
+        .mode("overwrite").bucketBy(8, "l_orderkey").sortBy("l_orderkey")
+        .saveAsTable(li)
+      Tables.orders(s, d).write.option("path", s"$base/$o")
+        .mode("overwrite").bucketBy(8, "o_orderkey").sortBy("o_orderkey")
+        .saveAsTable(o)
+      (li, o)
+    }
     (s.table(liT), s.table(oT))
   }
 

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.core.{QueryDef, Tables}
+import graft.core.{QueryDef, Snapshots, Tables}
 import graft.core.QueryDef.sql
 
 /** Similarity search over the `embeddings` table (64-dim float vectors).
@@ -941,24 +941,19 @@ object Similarity {
     * kNN. */
   private val NoShardCap = 1000000000L
 
-  /** The exact FLOAT within-cell top-3 — the shard-recall certificates'
-    * ground truth — as SHARED index state (r14; the r13-verdict-#5
-    * pattern applied to the dedup recall certificates in 2c12286,
-    * extended here to the sim family): `sim_knn_shard_recall` and
-    * `sim_int8_shard_recall` grade against the SAME uncapped exact
-    * frame, built once per (application, corpus) and read back as a
-    * parquet snapshot by whichever certificate runs second — the
-    * deliberately-quadratic ground truth the family pays for ONCE per
-    * run instead of once per certificate. Execution-only sharing: both
-    * SQL oracles are unchanged and the driver's hash compare is the
-    * bit-identity proof (the ranking is deterministic — 4-dp-rounded
-    * cos, dst tie-break — so the frame is identical whichever
-    * certificate builds it, and [[ivfAssignDf]] is a frozen-codebook
-    * deterministic assignment). */
+  /** The exact FLOAT within-cell top-3 — the shard-recall certificates' ground
+    * truth — as a shared snapshot ([[graft.core.Snapshots]]):
+    * `sim_knn_shard_recall` and `sim_int8_shard_recall` grade against the SAME
+    * uncapped exact frame, so the family pays the deliberately-quadratic
+    * ground truth ONCE per run instead of once per certificate. Execution-only
+    * sharing: both SQL oracles are unchanged and the driver's hash compare is
+    * the bit-identity proof (the ranking is deterministic — 4-dp-rounded cos,
+    * dst tie-break — so the frame is identical whichever certificate builds it,
+    * and [[ivfAssignDf]] is a frozen-codebook deterministic assignment). */
   private def sharedExactKnnTop3(s: org.apache.spark.sql.SparkSession,
       d: String, assign: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame =
-    TextOps.snapshotOnce(s, d, "knn-exact-top3")(
+    Snapshots.parquet(s, d, "knn-exact-top3")(
       knnRankedDf(s, d, cap = NoShardCap, sharedAssign = Some(assign),
           topK = Some(3))
         .select("src", "dst").repartition(col("src")))
@@ -1244,20 +1239,17 @@ object Similarity {
     * pagerank = N_3/120³ is the single float op — partition-order-proof
     * and engine-proof. Sums run as DECIMAL(38,0)/HUGEINT so a mega-in-
     * degree hub cannot overflow a 64-bit sum at corpus scale. */
-  /** The top-3 kNN edge list `(src, dst)` as SHARED index state (r14;
-    * the r13-verdict-#5 sharing pattern applied to the graph family):
-    * `graph_pagerank`, `graph_triangles` and `graph_label_prop` all walk
-    * the SAME kNN graph, and each rebuilt the full assign→candidate-join→
-    * top-3-heap chain per query. One build per (application, corpus),
-    * parquet snapshot, consumers read it back. `sim_knn_graph` — the
-    * declared kNN-graph query itself — deliberately keeps the full inline
-    * recompute, so the chain's from-parquet cost stays separately
-    * measured within every run. Execution-only sharing: the three graph
-    * oracles are unchanged and the edge list is deterministic (4-dp cos
-    * desc, dst tie-break heap over the frozen-codebook assignment). */
+  /** The top-3 kNN edge list `(src, dst)` as a shared snapshot
+    * ([[graft.core.Snapshots]]): `graph_pagerank`, `graph_triangles` and
+    * `graph_label_prop` all walk the SAME kNN graph, built once instead of once
+    * per query. `sim_knn_graph` — the declared kNN-graph query itself —
+    * deliberately keeps the full inline recompute, so the chain's from-parquet
+    * cost stays separately measured within every run. Execution-only sharing:
+    * the three graph oracles are unchanged and the edge list is deterministic
+    * (4-dp cos desc, dst tie-break heap over the frozen-codebook assignment). */
   private def sharedKnnTop3Edges(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    TextOps.snapshotOnce(s, d, "knn-top3-edges")(
+    Snapshots.parquet(s, d, "knn-top3-edges")(
       knnRankedDf(s, d, topK = Some(3)).select("src", "dst")
         .repartition(col("src")))
 

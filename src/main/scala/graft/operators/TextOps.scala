@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import graft.core.{QueryDef, Tables}
+import graft.core.{QueryDef, Snapshots, Tables}
 import graft.core.QueryDef.sql
 
 /** Text-analysis + deduplication operators over the `documents` table — the
@@ -233,25 +233,21 @@ object TextOps {
     if (cacheResult) capped.cache() else capped
   }
 
-  /** The df-capped pairs+sizes scaffolding `(da, db, common, na, nb)` as
-    * SHARED index state (r14; the r13-verdict-#5 sharing pattern, and
-    * exactly the deployment shape [[dedupSimhashPrecMaterialized]]'s
-    * scaladoc has declared since r9: every consumer of the capped-pair
-    * frame — jaccard / containment / minhash-est / the dfcap recall
-    * certificate — joins ONE per-corpus materialization instead of each
-    * re-running shingle→df-cap→self-join). Built once per (application,
-    * corpus), from the same raw shingle snapshot the AllPairs ground
-    * truth shares. Execution-only sharing: every consumer's SQL oracle is
-    * unchanged and the frame content is deterministic (groupBy counts +
-    * size joins), so the driver's hash compare is the bit-identity proof.
-    * `dedup_simhash_prec` deliberately keeps the full inline recompute,
-    * so the chain's from-raw-parquet cost stays separately measured
-    * within every run. */
+  /** The df-capped pairs+sizes scaffolding `(da, db, common, na, nb)` as a
+    * shared snapshot ([[graft.core.Snapshots]]): every consumer of the
+    * capped-pair frame — jaccard / containment / minhash-est / the dfcap recall
+    * certificate — joins ONE per-corpus materialization, built from the raw
+    * shingle snapshot the AllPairs ground truth shares, instead of each
+    * re-running shingle→df-cap→self-join. Execution-only sharing: every
+    * consumer's SQL oracle is unchanged and the frame content is deterministic
+    * (groupBy counts + size joins), so the driver's hash compare is the
+    * bit-identity proof. `dedup_simhash_prec` deliberately keeps the full
+    * inline recompute, so the chain's from-raw-parquet cost stays separately
+    * measured within every run. */
   private def sharedCappedPairs(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
-    // sequential snapshots, NOT nested (see sharedExactPairs)
     val sh = sharedShingleIndex(s, d)
-    snapshotOnce(s, d, "capped-pairs")(
+    Snapshots.parquet(s, d, "capped-pairs")(
       cappedPairsWithSizes(s, d,
         Some(cappedShingleIndex(s, d, shIn = Some(sh))))
         .repartition(col("da")))
@@ -460,9 +456,9 @@ object TextOps {
   private def allpairsDf(s: org.apache.spark.sql.SparkSession, d: String) =
     allpairsOver(shingles(s, d))
 
-  /** The exact AllPairs GROUND TRUTH as shared index state (r13 verdict
-    * #5): the shingle inverted index and the verified τ=0.8 pair set are
-    * built ONCE per (application, corpus) and read by every recall
+  /** The exact AllPairs GROUND TRUTH as shared snapshots
+    * ([[graft.core.Snapshots]]): the shingle inverted index and the
+    * verified τ=0.8 pair set are built ONCE and read by every recall
     * certificate — minhash, simhash and df-cap all grade against the SAME
     * `apairs` frame, exactly the deployment shape their `_materialized`
     * twins declare (one ground-truth build per corpus snapshot, every
@@ -471,20 +467,18 @@ object TextOps {
     * semantics, and the driver's hash compare is the bit-identity proof. */
   private def sharedExactPairs(s: org.apache.spark.sql.SparkSession, d: String)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    // sequential snapshots, NOT nested: computeIfAbsent re-entering the
-    // same ConcurrentHashMap risks a recursive-update IllegalStateException
     val sh = sharedShingleIndex(s, d)
-    val exact = snapshotOnce(s, d, "allpairs-exact")(
+    val exact = Snapshots.parquet(s, d, "allpairs-exact")(
       allpairsOver(sh).select("da", "db").repartition(col("da")))
     (sh, exact)
   }
 
-  /** The raw shingle inverted index `(doc_id, sh)` as shared index state —
-    * ONE explode over the corpus per (application, corpus), read by the
-    * AllPairs ground truth and the capped-pairs scaffolding alike. */
+  /** The raw shingle inverted index `(doc_id, sh)` as a shared snapshot —
+    * ONE explode over the corpus, read by the AllPairs ground truth and
+    * the capped-pairs scaffolding alike. */
   private def sharedShingleIndex(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    snapshotOnce(s, d, "shingle-index")(
+    Snapshots.parquet(s, d, "shingle-index")(
       shingles(s, d).repartition(col("doc_id")))
 
   /** The AllPairs chain over ANY (doc_id, sh) inverted index — the
@@ -981,32 +975,6 @@ object TextOps {
       incrementalVerdicts(minhashBandPairs(s, d).cache(), incrementalSide(s, d))
   }
 
-  /** THE materialize-once discipline shared by every `_materialized`
-    * snapshot twin: `build` is evaluated and written as parquet exactly
-    * once per (application, dataset, name) — Verify/Bench and the
-    * determinism gates invoke query fns repeatedly, and a fresh temp dir
-    * per call would leak directories AND re-run the exact chain the twin
-    * exists to amortize — then every call reads the snapshot back.
-    * Callers `repartition` inside `build` to shape the FILES (one hash
-    * range per file, no small-file spray); plain parquet does not persist
-    * the partitioning for readers, so consumers joining on the key still
-    * shuffle — a deployment that needs co-located joins writes bucketBy
-    * into a catalog table instead (the BucketingSpec discipline). */
-  private val snapCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, String), String]()
-  private[operators] def snapshotOnce(s: org.apache.spark.sql.SparkSession, d: String,
-      name: String)(build: => org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val p = snapCache.computeIfAbsent(
-      (s.sparkContext.applicationId, d, name), { _ =>
-        val dir = java.nio.file.Files
-          .createTempDirectory(s"$name-snap").toString
-        build.write.mode("overwrite").parquet(dir)
-        dir
-      })
-    s.read.parquet(p)
-  }
-
   /** The MATERIALIZED twin of `dedup_incremental` — the deployment shape
     * its scaladoc promises: the shingle→MinHash→band→bucket pair graph is
     * computed ONCE per corpus snapshot, written as parquet, and the
@@ -1019,7 +987,7 @@ object TextOps {
   val dedupIncrementalMaterialized = sql(
     "dedup_incremental_materialized", incrementalOracleSql) { (s, d) =>
     incrementalVerdicts(
-      snapshotOnce(s, d, "band-pairs")(
+      Snapshots.parquet(s, d, "band-pairs")(
         minhashBandPairs(s, d).repartition(col("da"))),
       incrementalSide(s, d))
   }
@@ -2330,7 +2298,7 @@ object TextOps {
   val dedupLabelsMaterialized = sql(
     "dedup_labels_materialized", dupStatsOracleSql) { (s, d) =>
     dupStatsRollup(
-      snapshotOnce(s, d, "cluster-labels")(
+      Snapshots.parquet(s, d, "cluster-labels")(
         clusterLabels(s, d).repartition(col("doc_id"))), s, d)
   }
 
@@ -3209,7 +3177,7 @@ object TextOps {
   val dedupSimhashPrecMaterialized = sql(
     "dedup_simhash_prec_materialized", simhashPrecOracleSql) { (s, d) =>
     simhashPrecReport(
-      snapshotOnce(s, d, "simhash-flagged")(
+      Snapshots.parquet(s, d, "simhash-flagged")(
         dedupSimhashPairs.fn(s, d).select("da", "db").repartition(col("da"))),
       sharedCappedPairs(s, d))
   }
@@ -3354,7 +3322,7 @@ object TextOps {
     // recompute as the from-raw anchor. The frame is reduced (one row
     // per maximal run, bounded by true duplicate volume), so the
     // snapshot is small wherever the corpus is clean.
-    val runsShared = snapshotOnce(s, d, "substring-runs")(
+    val runsShared = Snapshots.parquet(s, d, "substring-runs")(
       substringRuns(s, d).repartition(col("da")))
     // cov is pinned to hash(doc_id) — a PREFIX of the anti-join keys — so
     // the join co-partitions BOTH sides on doc_id alone (SPARK-35703

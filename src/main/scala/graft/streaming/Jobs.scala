@@ -711,6 +711,22 @@ object Jobs {
       .filter(col("logw") >= minLogw)
   }
 
+  /** The label of the codebook centroid nearest to `embedding`: native
+    * `squared_distance` to each centroid, then the first minimum, which
+    * reproduces the batch `min(struct(dist, label))` label tie-break. A
+    * null embedding, or a centroid of another dimension, has a null
+    * distance, which `array_min` skips. With no candidate the cell is
+    * null: `element_at` over a null-free literal array would read the
+    * null index as a non-null default. */
+  private def nearestCell(labels: Array[Int], cents: Array[Array[Double]]): Column = {
+    require(labels.length == cents.length && labels.nonEmpty,
+      "codebook labels and centroids must align")
+    val dists = transform(typedLit(cents.map(_.toSeq).toSeq),
+      c => graft.functions.SquaredDistance.squared_distance(col("embedding"), c))
+    val pos = array_position(dists, array_min(dists)).cast("int")
+    when(pos.isNotNull, element_at(typedLit(labels.toSeq), pos))
+  }
+
   /** STREAMING EMBEDDING NEAR-DUP GATE — the arrival-time twin of
     * SemDeDup's eviction rule: an incoming vector is dropped when the
     * FROZEN corpus index already holds a vector in its IVF cell at cosine
@@ -721,25 +737,17 @@ object Jobs {
     * k×64 LITERAL (kilobytes); each micro-batch is one stream-static
     * LEFT ANTI equi-join on the cell key.
     *
-    * Determinism parity: cell assignment embeds the SAME native
-    * `squared_distance` accumulation as the batch `sim_ivf_assign`, over
-    * the SAME 4-dp-rounded centroids, with the first-minimum
-    * `array_position` reproducing the batch `min(struct(dist, label))`
-    * label tie-break — StreamingSpec proves streamed survivors equal the
-    * batch-computed verdict set on a disjoint even/odd corpus split.
-    * Input needs (vec_id, embedding); `index` needs (cell, embedding,
-    * nrm). */
+    * Determinism parity: cells come from [[nearestCell]] over the SAME
+    * 4-dp-rounded centroids as the batch `sim_ivf_assign` — StreamingSpec
+    * proves streamed survivors equal the batch-computed verdict set on a
+    * disjoint even/odd corpus split. Input needs (vec_id, embedding);
+    * `index` needs (cell, embedding, nrm). */
   def annGate(incoming: DataFrame, index: DataFrame,
       labels: Array[Int], cents: Array[Array[Double]],
       thr: Double = graft.operators.Similarity.CosineNearDupThreshold)
       : DataFrame = {
-    require(labels.length == cents.length && labels.nonEmpty,
-      "codebook labels and centroids must align")
-    val dists = transform(typedLit(cents.map(_.toSeq).toSeq),
-      c => graft.functions.SquaredDistance.squared_distance(col("embedding"), c))
     val inc = incoming
-      .withColumn("cell", element_at(typedLit(labels.toSeq),
-        array_position(dists, array_min(dists)).cast("int")))
+      .withColumn("cell", nearestCell(labels, cents))
       .withColumn("nrm", sqrt(graft.functions.DotProduct
         .dot_product(col("embedding"), col("embedding"))))
     val idx = index.select(col("cell").as("__icell"),
@@ -751,30 +759,23 @@ object Jobs {
       "left_anti")
   }
 
-  /** One micro-batch of the STREAMING ANN SERVING path — the query-side
-    * twin of [[annGate]]'s ingest side: a batch of query vectors is
-    * assigned to cells by the same broadcast codebook literal (first-
-    * minimum argmin ≡ the batch `min(struct(dist, label))` tie-break),
-    * then joined against the frozen cell-partitioned corpus index so each
-    * index vector is scored only against the queries probing its cell —
-    * the `sim_ivf_batch_topk` economics, per micro-batch. Cosines use the
-    * index's precomputed norms and the shared native dot-product fold, and
-    * round 4 dp exactly like the batch query; per-query top-k is a window
-    * over the bounded probed-cell candidates. StreamingSpec proves the
-    * streamed results row-identical to `sim_ivf_batch_topk` on the same
-    * query/corpus split. Input needs (vec_id, embedding); `index` needs
-    * (cell, vec_id, embedding, nrm). */
+  /** One micro-batch of the STREAMING ANN SERVING path — the query-side twin of
+    * [[annGate]]'s ingest side: a batch of query vectors is assigned to cells
+    * by [[nearestCell]], then joined against the frozen cell-partitioned corpus
+    * index so each index vector is scored only against the queries probing its
+    * cell — the `sim_ivf_batch_topk` economics, per micro-batch. Cosines use
+    * the index's precomputed norms and the shared native dot-product fold, and
+    * round 4 dp exactly like the batch query; per-query top-k is a window over
+    * the bounded probed-cell candidates. StreamingSpec proves the streamed
+    * results row-identical to `sim_ivf_batch_topk` on the same query/corpus
+    * split. Input needs (vec_id, embedding); `index` needs (cell, vec_id,
+    * embedding, nrm). */
   def annServeBatch(queryBatch: DataFrame, index: DataFrame,
       labels: Array[Int], cents: Array[Array[Double]], k: Int = 3)
       : DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    require(labels.length == cents.length && labels.nonEmpty,
-      "codebook labels and centroids must align")
-    val dists = transform(typedLit(cents.map(_.toSeq).toSeq),
-      c => graft.functions.SquaredDistance.squared_distance(col("embedding"), c))
     val qs = queryBatch
-      .withColumn("cell", element_at(typedLit(labels.toSeq),
-        array_position(dists, array_min(dists)).cast("int")))
+      .withColumn("cell", nearestCell(labels, cents))
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         col("cell"))
     val qn = sqrt(graft.functions.DotProduct.dot_product(col("qv"), col("qv")))
@@ -916,46 +917,17 @@ object Jobs {
     * downstream `partitionBy("cell")` sink co-locates every cell's vectors
     * and the batch IVF probe (`sim_ivf_topk`) can prune to one shard.
     *
-    * Streaming shape: the codebook is tiny (k rows) and BROADCAST; the
-    * argmin runs as a per-row loop over the k cells — a STATELESS narrow
-    * map (no stream-static join, no streaming aggregation, no state
-    * store), which is the only shape that keeps an ingest stream at Kafka
-    * throughput. The loop accumulates in double in strict ascending index
-    * order — the identical IEEE op sequence as the batch-side native
-    * `squared_distance` — and ties break to the smallest cell id, so the
-    * streaming assignment is bit-identical to the batch argmin
-    * (parity-proven in StreamingSpec). */
+    * Streaming shape: the codebook is tiny (k rows) and rides the plan as
+    * a LITERAL; the argmin is [[nearestCell]], a STATELESS narrow map (no
+    * stream-static join, no state store). Sorted by cell id and widened to
+    * double (exact), the codebook gives the batch argmin bit for bit
+    * (parity-proven in StreamingSpec). A null embedding or a dimension
+    * that matches no codebook entry routes to cell NULL. */
   def embeddingRouter(embs: DataFrame,
       codebook: Seq[(Int, Array[Float])]): DataFrame = {
     val sorted = codebook.sortBy(_._1).toArray
-    val cbB = embs.sparkSession.sparkContext.broadcast(sorted)
-    // Option[Int] result: a malformed record (null embedding, or a
-    // dimension that matches no codebook entry) routes to cell NULL rather
-    // than killing the stream — matching the batch path, where
-    // squared_distance yields null on null/length-mismatch and the argmin
-    // aggregate then has no candidate. A dead-letter filter on
-    // `cell IS NULL` is the caller's quarantine hook.
-    val assignCell = udf { (v: Seq[Float]) =>
-      if (v == null) Option.empty[Int]
-      else {
-        val cb = cbB.value
-        var best = Option.empty[Int]
-        var bestD = Double.PositiveInfinity
-        var j = 0
-        while (j < cb.length) {
-          val c = cb(j)._2
-          if (c.length == v.length) { // mismatched entries are no candidate
-            var d = 0.0
-            var i = 0
-            while (i < c.length) { val t = v(i).toDouble - c(i).toDouble; d += t * t; i += 1 }
-            if (d < bestD) { bestD = d; best = Some(cb(j)._1) } // ascending scan → min cell on tie
-          }
-          j += 1
-        }
-        best
-      }
-    }
-    embs.withColumn("cell", assignCell(col("embedding")))
+    embs.withColumn("cell",
+      nearestCell(sorted.map(_._1), sorted.map(_._2.map(_.toDouble))))
   }
 
   /** Production Kafka wiring (S1/S2 sources, K1/K2 sinks;
