@@ -31,7 +31,9 @@ import org.apache.spark.sql.functions._
   * Output: BENCH_SCALE.json — per query t×1/t×8/t×32[/t×64]
   * (steady-state min-of-[[Repeats]] seconds) and the fitted exponent.
   *
-  * Usage: runMain graft.dev.ScaleProbe [baseSfDir]
+  * Usage: runMain graft.dev.ScaleProbe [baseSfDir]; it runs at
+  * `SPARK_GRAFT_CPUS` cores (default: all the JVM sees), like Bench and
+  * Verify, and writes that count into its JSON as `cpus`.
   */
 object ScaleProbe {
 
@@ -61,15 +63,14 @@ object ScaleProbe {
     * STEADY-STATE repeats (this host swings 2–4× between identical runs;
     * the first-in-session execution pays ~100 s of page-cache/JIT warmup
     * — one session measured 47.6/107/174.6 s for three repeats of ONE
-    * query). Promoted here (round-11 VERDICT #8) so every future
-    * exponent recording inherits min-of-N instead of min-of-2:
-    * `SCALE_PROBE_REPEATS` overrides (≥2; full runs keep the default). */
-  val Repeats: Int =
-    math.max(2, sys.env.get("SCALE_PROBE_REPEATS").map(_.toInt).getOrElse(3))
+    * query). Promoted here (round-11 VERDICT #8) so every exponent
+    * recording inherits min-of-N instead of min-of-2. */
+  val Repeats = 3
 
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = graft.core.Tables.localSession("scale-probe", cores = 32)
+    val cpus = graft.core.Tables.envCores
+    val spark = graft.core.Tables.localSession("scale-probe", cpus)
 
     // dev-only probe subset, the same filter Bench and Verify read
     // (comma-separated names; full runs never set it)
@@ -164,7 +165,7 @@ object ScaleProbe {
       s""""$name":{"scales":[${scalesFor.mkString(",")}],""" +
         s""""t":[${ts.map(j).mkString(",")}],"exponent":${j(slope)}}"""
     }.mkString(
-      s"""{"base":"$base","scales":[${Scales.mkString(",")}],"shard_recall":$recallJson,"queries":{""",
+      s"""{"base":"$base","cpus":$cpus,"scales":[${Scales.mkString(",")}],"shard_recall":$recallJson,"queries":{""",
       ",", "}}")
     // a dev-subset run must not clobber the committed full-probe artifact
     val outPath = if (onlyProbes.isEmpty) "BENCH_SCALE.json"

@@ -667,31 +667,6 @@ object Similarity {
     * residual trade. */
   private[graft] val CellShardCap = 1024L
 
-  /** Edge-count threshold above which the iterative graph queries
-    * (`graph_pagerank`, `graph_label_prop`) materialize their edge list
-    * ONCE, hash-partitioned on the per-round join key, instead of
-    * re-exchanging it from cache every round (r13, guide §2.4). At or
-    * below it the whole graph is a few MB and three per-round exchanges
-    * cost less than the two extra materialization jobs (measured +0.6-0.9 s
-    * at sf0.1's 6 k-edge graphs); above it the per-round exchange grows
-    * linearly with the corpus while the materialization stays two jobs —
-    * the r12 scale ladders (exponents 0.838/0.774, BENCH_SCALE.json) are
-    * dominated by exactly that re-exchange. The count-then-branch is the
-    * same adaptivity pattern as [[graft.operators.TextOps]]'
-    * SmallGraphEdgeLimit; both paths feed identical frames to identical
-    * operators, so results are path-invariant by construction. */
-  private[graft] val GraphPrepartitionEdges = 30000L
-
-  /** The threshold as a session conf so the big-graph branch is TESTABLE
-    * on small corpora (r13 verdict #3: the >30 k-edge path had never
-    * executed under a correctness check): `GraphPathSpec` sets
-    * `graft.graphPrepartitionEdges=0` to force the pre-partitioned path
-    * on the oracle corpus and asserts row-identical output against the
-    * default path. Production runs never set it — the default is the
-    * measured constant above. */
-  private[graft] def graphPrepartitionEdges(s: org.apache.spark.sql.SparkSession): Long =
-    s.conf.get("graft.graphPrepartitionEdges", GraphPrepartitionEdges.toString).toLong
-
   /** One within-cell top-k ranking CTE chain ending in `rk<sfx>(src, dst,
     * cos, rn)` — cap-parameterized so the shard-recall certificate can
     * instantiate a forced-low-cap chain and an effectively-uncapped chain
@@ -1227,9 +1202,12 @@ object Similarity {
     * Scale shape: each iteration is one equi-join of the edge list
     * against the vertex-sized score frame plus a partial-aggregable
     * groupBy(dst) — out-degree ≤ 3 bounds fan-out, so an iteration is
-    * linear in |V|. The iteration count is FIXED (unrolled, one static
-    * plan); an open-ended convergence loop would instead checkpoint per
-    * round exactly like `connectedComponentsDistributed`.
+    * linear in |V|. The weighted edge list is materialized once,
+    * hash-partitioned by src, at every graph size, so the rounds move
+    * only the vertex-sized score frames. The iteration count is FIXED
+    * (unrolled, one static plan); an open-ended convergence loop would
+    * instead checkpoint per round exactly like
+    * `connectedComponentsDistributed`.
     *
     * EXACT ARITHMETIC: float power iteration hit a 4-dp rounding boundary
     * (0.74075) the moment partition count changed the accumulation order.
@@ -1279,25 +1257,13 @@ object Similarity {
        |       CAST(coalesce(d.outdeg, 0) AS BIGINT) AS outdeg
        |FROM p3 LEFT JOIN deg d ON d.src = p3.vec_id
        |ORDER BY vec_id""".stripMargin) { (s, d) =>
-    // Edge frame (r13, guide §2.4): above [[GraphPrepartitionEdges]] the
-    // edge list is materialized ONCE, hash-partitioned by src — the
-    // cached-view form re-read the cache AND re-exchanged the edge list
-    // by src inside every one of the 3 unrolled rounds (the steepest
-    // ladder in BENCH_SCALE r12, exponent 0.838, was driven by exactly
-    // that per-round reshuffle). With the layout established once, each
-    // round's edge⋈score join reuses it and only the vertex-sized score
-    // frames move; deg derives from the same partitioning exchange-free.
-    // At or below the threshold the plain cached path runs — the same
-    // count-then-branch adaptivity as labelsFromPairs (results are
-    // path-invariant: both feed identical frames to identical operators).
-    val eRaw = sharedKnnTop3Edges(s, d).cache()
-    val big = eRaw.count() > graphPrepartitionEdges(s)
-    val e = if (big) eRaw.repartition(col("src")).localCheckpoint(true)
-      else eRaw
+    // deg and every round's edge⋈score join reuse this src layout
+    val e = sharedKnnTop3Edges(s, d).repartition(col("src"))
+      .localCheckpoint(true)
     val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val withDeg0 = e.join(deg, "src")
+    val withDeg = e.join(deg, "src")
       .withColumn("w", expr("102 div outdeg")) // exact: outdeg | 102
-    val withDeg = if (big) withDeg0.localCheckpoint(true) else withDeg0
+      .localCheckpoint(true)
     val v = Tables.embeddings(s, d).select("vec_id")
     def step(prev: org.apache.spark.sql.DataFrame, base: Long) = {
       val contrib = withDeg
@@ -1393,9 +1359,12 @@ object Similarity {
     * Scale shape: one round = edge⋈label equi-join + a partial-aggregable
     * (vertex, label) vote count + a per-vertex window over the bounded
     * neighbor-label frame (≤ degree rows) — linear in |E| per round, no
-    * global structure. Community sizes come from a groupBy+join, not an
-    * unpartitioned window. All-integer state: votes are exact counts,
-    * labels are ids — nothing to round, bit-identical across engines. */
+    * global structure. The symmetrized edge list is materialized once,
+    * hash-partitioned by the vote-join key, at every graph size, so the
+    * rounds move only the vertex-sized label frames. Community sizes
+    * come from a groupBy+join, not an unpartitioned window. All-integer
+    * state: votes are exact counts, labels are ids — nothing to round,
+    * bit-identical across engines. */
   val graphLabelProp = sql(
     "graph_label_prop", {
       val rounds = (1 to 3).map { k =>
@@ -1425,18 +1394,10 @@ object Similarity {
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b")).distinct()
       .cache() // both union directions read it — one snapshot scan, not two
-    // Above [[GraphPrepartitionEdges]], materialized ONCE hash-partitioned
-    // by the vote-join key u (r13, guide §2.4): the cached form
-    // re-exchanged the full edge list by u in every round (BENCH_SCALE
-    // r12 exponent 0.774, per-round edge reshuffle); with the layout
-    // pinned, each round's edge⋈label join moves only the vertex-sized
-    // label frame. Small graphs keep the plain cached path (same
-    // count-then-branch adaptivity as pagerank / labelsFromPairs).
-    val eeRaw = e.select(col("a").as("v"), col("b").as("u"))
+    // every round's edge⋈label join reuses this layout on the vote key u
+    val ee = e.select(col("a").as("v"), col("b").as("u"))
       .unionAll(e.select(col("b").as("v"), col("a").as("u")))
-      .cache()
-    val ee = if (eeRaw.count() > graphPrepartitionEdges(s))
-      eeRaw.repartition(col("u")).localCheckpoint(true) else eeRaw
+      .repartition(col("u")).localCheckpoint(true)
     // each round reads the previous label frame TWICE (vote side +
     // join-back side), so un-truncated lineage doubles per round (2^k
     // subtree copies of the kNN chain) — localCheckpoint per round keeps
