@@ -90,12 +90,10 @@ object Bench {
     // a query's passes.
     val raw = scala.collection.mutable.LinkedHashMap.empty[String, List[Double]]
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // Subset filter (comma-separated names): times a query subset exactly
-    // like the sweep while iterating, raw per-pass times in BENCH_DEV.json.
-    // Full runs never set it, so round artifacts always cover the full
-    // surface.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
+    // Subset filter: times a query subset exactly like the sweep while
+    // iterating, raw per-pass times in BENCH_DEV.json. Full runs never set
+    // it, so round artifacts always cover the full surface.
+    val only = Tables.envOnly
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .flatMap { case (name, fn) =>
@@ -131,13 +129,7 @@ object Bench {
     def jarr(ts: List[Double]) = ts
       .map(t => String.format(java.util.Locale.ROOT, "%.3f", Double.box(t)))
       .mkString("[", ",", "]")
-    def jstr(s: String) =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case '\r' => "\\r"; case '\t' => "\\t"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
+    import Verify.jstr
     def jnum(t: Double) =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(t))
     val qs = results.map { case (k, v) => jstr(k) + ":" + jnum(v) }

@@ -4,11 +4,22 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** JSON string literal: backslash, quote, and ALL control chars (<0x20)
+    * escaped — a tab or CR in oracle SQL would otherwise make the driver's
+    * json.load fail and silently zero the round's correctness. Bench
+    * renders its JSON with it too. */
+  def jstr(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    // sfDir hint for cold-start oracle resolution (ml_rf_score's persisted
-    // compiled-forest SQL is keyed by sfDir; see QuarterPrediction)
-    System.setProperty("graft.sf.dir", sfDir)
     val spark = Tables.localSession("verify", Tables.envCores)
     new java.io.File(outDir).mkdirs()
     // Failure honesty: a throwing query MUST leave a visible artifact, not
@@ -16,9 +27,8 @@ object Verify {
     // rows exactly that way). Each failure is recorded in failed.json and
     // the process exits nonzero, mirroring Bench's failed/rc discipline.
     val failed = scala.collection.mutable.LinkedHashMap[String, String]()
-    // dev-only subset filter (driver never sets it): comma-separated names
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).toSet).filter(_.nonEmpty)
+    // dev-only subset filter (driver never sets it)
+    val only = Tables.envOnly
     def wanted(n: String) = only.forall(_.contains(n))
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => wanted(n) }.foreach { case (name, fn) =>
@@ -32,20 +42,9 @@ object Verify {
         failed(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // ml_rf_score's oracle is the forest trained by the loop above
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
 
     // Determinism gate for rows-only queries (no DuckDB oracle exists for
@@ -69,12 +68,12 @@ object Verify {
           System.err.println(s"[verify] self-consistency $name failed: ${e.getMessage}")
           false
         }
-      s"${q(name)}: {${q("self_consistent")}: $ok}"
+      s"${jstr(name)}: {${jstr("self_consistent")}: $ok}"
     }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/self_consistency.json"), selfJson)
 
     val failedJson = failed
-      .map { case (k, v) => s"${q(k)}: ${q(v.take(500))}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jstr(k)}: ${jstr(v.take(500))}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/failed.json"), failedJson)
     spark.stop()
     if (failed.nonEmpty) {

@@ -78,6 +78,16 @@ object Tables {
   def envCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors)
 
+  /** The query subset Bench, Verify and ScaleProbe restrict themselves to:
+    * the comma-separated names in `SPARK_GRAFT_ONLY`, or None (every
+    * query) when it is unset or names nothing. */
+  def envOnly: Option[Set[String]] = parseOnly(sys.env.get("SPARK_GRAFT_ONLY"))
+
+  /** A blank value or a list of blanks (`""`, `" , "`) means unset: read as
+    * an empty subset it would run zero queries and still exit 0. */
+  private[graft] def parseOnly(raw: Option[String]): Option[Set[String]] =
+    raw.map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet).filter(_.nonEmpty)
+
   /** The one session factory: Bench, Verify, the dev mains, perfbench and
     * the specs all run in a session from here, so a number or a plan from
     * any of them was produced under the same conf set. Shuffle partitions

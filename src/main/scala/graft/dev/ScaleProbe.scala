@@ -71,14 +71,22 @@ object ScaleProbe {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     val cpus = graft.core.Tables.envCores
     val spark = graft.core.Tables.localSession("scale-probe", cpus)
+    // the amplified corpora (x8..x64 of the base) live only for this run
+    val root = java.nio.file.Files.createTempDirectory("scaleprobe")
+    try probe(spark, base, cpus, root.toString)
+    finally {
+      spark.stop()
+      graft.core.NioCheckpointFileManager.deleteTree(root)
+    }
+  }
 
-    // dev-only probe subset, the same filter Bench and Verify read
-    // (comma-separated names; full runs never set it)
-    val onlyProbes = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
+  private def probe(spark: SparkSession, base: String, cpus: Int,
+      root: String): Unit = {
+    // dev-only probe subset, the same filter Bench and Verify read (full
+    // runs never set it)
+    val onlyProbes = graft.core.Tables.envOnly
     val probes = Probes.filter(n => onlyProbes.forall(_.contains(n)))
 
-    val root = java.nio.file.Files.createTempDirectory("scaleprobe").toString
     val allScales = Scales ++
       (if (probes.exists(X64Probes)) Seq(64) else Nil)
     val dirs: Map[Int, String] = allScales.map { k =>
@@ -173,7 +181,6 @@ object ScaleProbe {
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(outPath), json + "\n")
     println(json)
-    spark.stop()
   }
 
   /** doc_id/vec_id replica offset — far above any real id in testdata.

@@ -153,40 +153,11 @@ object QuarterPrediction {
   private val modelCache =
     scala.collection.concurrent.TrieMap.empty[String, PipelineModel]
 
-  /** The key of the most recently trained sfDir — the model whose scores
-    * the oracle must replay. Within one Verify/Bench run there is exactly
-    * one sfDir, so "last" is unambiguous there. */
-  private val lastKey =
-    new java.util.concurrent.atomic.AtomicReference[String]()
-
-  /** Compiled oracle SQL per sfDir key, filled at train time (in-memory
-    * twin of the on-disk [[persistRoot]] files). */
-  private val compiledSqlCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** On-disk home of the compiled-forest oracle SQL: training is seeded
-    * and the training frame is deterministic per sfDir, so a persisted
-    * compilation is byte-identical to a fresh one for the same sfDir
-    * AND the same trainer — a pure cache keyed by the full (sanitized)
-    * sfDir path plus [[TrainerLayoutVersion]]. */
-  private val persistRoot = "ml-state"
-
-  /** Version stamp of everything the fitted forest depends on: the
-    * key-sample rule, the repartition/sort layout pin, the seed, and the
-    * [[RfSqlCompiler]] output format. BUMP THIS whenever any of those
-    * change — a persisted compilation from an older trainer replays a
-    * forest the current code no longer fits, and a cold-start Verify
-    * would trust it and hash-mismatch a CORRECT result (exactly what the
-    * round-10 coalesce(4)→repartition(4) layout pin would have done to
-    * any pre-existing ml-state file; the version key makes such files
-    * invisible instead). */
-  private val TrainerLayoutVersion = 2
-  private def sfKey(sfDir: String): String =
-    new java.io.File(sfDir).getAbsolutePath.replaceAll("[^A-Za-z0-9._-]", "_")
-  private def oracleFile(key: String) =
-    s"rf_oracle_v${TrainerLayoutVersion}_$key.sql"
-  private def oraclePath(key: String) =
-    java.nio.file.Paths.get(persistRoot, oracleFile(key))
+  /** The model the most recent [[trainAndScore]] scored with — the forest
+    * whose rows the oracle must replay. Within one Verify/Bench run there
+    * is exactly one sfDir, so "last" is unambiguous there. */
+  private val lastScored =
+    new java.util.concurrent.atomic.AtomicReference[PipelineModel]()
 
   /** Compiles the fitted pipeline's forest into the full `ml_rf_score`
     * oracle SQL. See [[RfSqlCompiler]] for the replay contract. */
@@ -202,33 +173,12 @@ object QuarterPrediction {
        |${RfSqlCompiler.scoreSelectSql(rf, feat, "base")}""".stripMargin
   }
 
-  /** Cold-start fallback: the persisted compilation, but ONLY when the
-    * right file is unambiguous — the sfDir hint (`graft.sf.dir` set by
-    * Verify, or `SPARK_GRAFT_SF_DIR` which Bench always has) naming a
-    * current-[[TrainerLayoutVersion]] file. No hint, a missing file, or
-    * a file from another trainer version all degrade to None (the
-    * rows-only check), never to a wrong-sfDir or stale-trainer oracle
-    * that would hash-mismatch a correct result. (A no-hint "exactly one
-    * file on disk" guess used to exist here; it could silently pick a
-    * file another process persisted for a DIFFERENT sfDir, so it is
-    * gone — every oracle-dumping path sets a hint.) */
-  private def loadPersisted(): Option[String] = {
-    val hint = sys.props.get("graft.sf.dir") // set by Verify from its arg
-      .orElse(sys.env.get("SPARK_GRAFT_SF_DIR")) // set for Bench by the driver
-    hint.map(k => oraclePath(sfKey(k))).filter(java.nio.file.Files.exists(_))
-      .map(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
-  }
-
-  /** Oracle SQL for `ml_rf_score`. In-JVM: available once `trainAndScore`
-    * has run (the driver's Verify runs every query BEFORE dumping
-    * oracle_sql.json, so the model for its sfDir is always compiled by
-    * then). Cold start (round-9 VERDICT #4): falls back to the SQL
-    * persisted at the last train for the same sfDir — so a fresh JVM that
-    * never trains still dumps the full oracle instead of silently
-    * degrading to rows-only. */
+  /** Oracle SQL for `ml_rf_score`: the compiled forest of the model the
+    * last [[trainAndScore]] scored with, or None before any training in
+    * this process (the driver's Verify runs every query before it dumps
+    * oracle_sql.json, so its model is trained by then). */
   def rfScoreOracleSql: Option[String] =
-    Option(lastKey.get()).flatMap(compiledSqlCache.get)
-      .orElse(try loadPersisted() catch { case _: Throwable => None })
+    Option(lastScored.get()).map(compileOracle)
 
   /** End-to-end: train on the sfDir tables (once per process, Q2), score
     * the full frame, emit the observable columns. Deterministic under the
@@ -258,34 +208,7 @@ object QuarterPrediction {
         .cache()
       train(if (trainDf.isEmpty) df else trainDf)
     })
-    val key = sfKey(sfDir)
-    compiledSqlCache.getOrElseUpdate(key, {
-      val sqlText = compileOracle(model)
-      // best-effort persist: the compilation is deterministic per sfDir
-      // (seeded training over a deterministic frame), so the file is a
-      // pure cache a cold JVM can trust; IO failure only costs cold-start
-      // oracle availability, never correctness
-      try {
-        java.nio.file.Files.createDirectories(
-          java.nio.file.Paths.get(persistRoot))
-        java.nio.file.Files.writeString(oraclePath(key), sqlText)
-        // hygiene: drop this key's files from other trainer versions
-        // (including the pre-versioning name) so stale compilations
-        // can't linger next to the live one. EXACT-name match only — a
-        // suffix match could hit a different sfDir whose sanitized key
-        // happens to end with "_<key>" and delete its live cache.
-        val stale = java.util.regex.Pattern.compile(
-          "rf_oracle(_v\\d+)?_" + java.util.regex.Pattern.quote(key) + "\\.sql")
-        val dir = new java.io.File(persistRoot)
-        Option(dir.list()).getOrElse(Array.empty[String])
-          .filter(n => stale.matcher(n).matches() && n != oracleFile(key))
-          .foreach(n => new java.io.File(dir, n).delete())
-      } catch { case e: Throwable =>
-        System.err.println(s"[ml] rf oracle persist failed: ${e.getMessage}")
-      }
-      sqlText
-    })
-    lastKey.set(key)
+    lastScored.set(model)
     score(model, df)
       .select("rowId", "winPeriod", "prediction", "prob", "msg")
       .orderBy("rowId")

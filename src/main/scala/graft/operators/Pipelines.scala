@@ -52,11 +52,10 @@ object Pipelines {
     * it can evaluate one — after `trainAndScore` runs (Verify runs every
     * query before dumping oracle_sql.json), the fitted 14-tree forest is
     * compiled into nested CASE expressions that replay Spark's scoring
-    * IEEE-op-for-IEEE-op ([[graft.ml.RfSqlCompiler]]). Cold start (fresh
-    * JVM, no model yet): the compilation persisted at the last train for
-    * the same sfDir is loaded from `ml-state/` — only a JVM that has
-    * NEVER trained on the target sfDir (ambiguous or absent persisted
-    * state) falls back to the rows-only check + DeterminismSpec pin. */
+    * IEEE-op-for-IEEE-op ([[graft.ml.RfSqlCompiler]]). The oracle is
+    * always the forest this process last scored with; a JVM that has not
+    * trained yet declares the query rows-only (DeterminismSpec pins its
+    * output). */
   def mlRfScore: QueryDef = QuarterPrediction.rfScoreOracleSql match {
     case Some(sqlText) =>
       sql("ml_rf_score", sqlText)((s, d) => QuarterPrediction.trainAndScore(s, d))

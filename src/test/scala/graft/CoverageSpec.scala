@@ -58,8 +58,9 @@ class CoverageSpec extends AnyFunSuite {
 
   test("README's oracle-checked/rows-only split matches SparkEntry") {
     // ml_rf_score's compiled-forest oracle appears once a model is trained
-    // in-process, so its presence depends on suite order — the README
-    // documents the stable fresh-JVM split and notes the dynamic upgrade
+    // in-process (no oracle state outlives the JVM), so its presence depends
+    // on suite order — the README documents the fresh-JVM split and notes
+    // the in-process upgrade
     val dynamicOracle = Set("ml_rf_score")
     val nOracle = (SparkEntry.oracleSql.keySet -- dynamicOracle).size
     val nRowsOnly = declared.size - nOracle

@@ -64,9 +64,10 @@ class DeterminismSpec extends AnyFunSuite {
     // the weaker rows-only driver check, so the set is pinned. (The
     // multimodal pair left it in round 7, the CV pipeline in round 8, and
     // in round 9 the RandomForest transform itself gained a compiled-forest
-    // oracle — ml_rf_score is rows-only ONLY in a fresh JVM where no model
-    // has been trained yet; once any suite scores it, the trained forest
-    // compiles to oracle SQL and the set is empty.)
+    // oracle — ml_rf_score is rows-only exactly while this JVM has not
+    // trained a model, since no oracle state outlives the JVM; once any
+    // suite scores it, the trained forest compiles to oracle SQL and the
+    // set is empty.)
     assert(rowsOnly.isEmpty || rowsOnly == Seq("ml_rf_score"),
       s"unexpected rows-only set: $rowsOnly")
   }

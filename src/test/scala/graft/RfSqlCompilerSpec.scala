@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 import graft.core.Tables
 import graft.ml.QuarterPrediction
 
@@ -54,5 +55,22 @@ class RfSqlCompilerSpec extends AnyFunSuite {
     // the vote normalization, and round-trips through SparkEntry.oracleSql
     assert(a.oracle.get.contains("CASE WHEN") && a.oracle.get.contains("v0 + v1"))
     assert(SparkEntry.oracleSql.contains("ml_rf_score"))
+  }
+
+  test("training writes no file: the oracle is compiled from the scored model") {
+    QuarterPrediction.trainAndScore(spark, sf)
+    // the oracle has no on-disk copy: no file under ml-state/, the dir a
+    // persisted compilation used, may be newer than this JVM
+    val jvmStart = java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime
+    val dir = java.nio.file.Paths.get("ml-state")
+    val written =
+      if (!java.nio.file.Files.isDirectory(dir)) Seq.empty
+      else scala.util.Using.resource(java.nio.file.Files.walk(dir)) {
+        _.iterator.asScala.filter(java.nio.file.Files.isRegularFile(_))
+          .filter(java.nio.file.Files.getLastModifiedTime(_).toMillis >= jvmStart).toList
+      }
+    assert(written.isEmpty, s"this JVM wrote under ml-state/: $written")
+    assert(QuarterPrediction.rfScoreOracleSql.isDefined)
+    assert(QuarterPrediction.rfScoreOracleSql == graft.operators.Pipelines.mlRfScore.oracle)
   }
 }

@@ -179,4 +179,11 @@ class TablesSpec extends AnyFunSuite {
       "the two layouts must canonicalize to identical (t_us, ts_micros)")
     assert(canon(longDf).map(_._1) == usVals)
   }
+
+  test("SPARK_GRAFT_ONLY parsing: blank values and blank names mean unset") {
+    assert(Tables.parseOnly(None).isEmpty)
+    assert(Tables.parseOnly(Some("")).isEmpty)
+    assert(Tables.parseOnly(Some(" , ")).isEmpty)
+    assert(Tables.parseOnly(Some("a, b,,")) == Some(Set("a", "b")))
+  }
 }
