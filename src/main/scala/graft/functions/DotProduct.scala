@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -23,8 +23,7 @@ import org.apache.spark.sql.types._
   * Semantics: null input array → null; null element → null (mirrors the
   * fold, where null poisons the accumulator); length mismatch → null
   * (zip_with pads the shorter side with nulls, and a null element poisons
-  * the fold — exactly reproduced so `NativeDotProductRule` may substitute
-  * this expression for the fold unconditionally).
+  * the fold).
   */
 case class DotProduct(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -111,8 +110,4 @@ object DotProduct {
   def dot_product(a: Column, b: Column): Column =
     GraftSqlBridge.column(
       DotProduct(GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product", exprs => DotProduct(exprs(0), exprs(1)), "scala_udf")
 }

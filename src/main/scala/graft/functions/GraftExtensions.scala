@@ -12,9 +12,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *   // or spark.sql.extensions=graft.functions.GraftExtensions
   * }}}
   *
-  * This is the injection surface custom operators grow into (planner
-  * strategies / resolution rules register the same way); today it carries
-  * the scalar-function registry.
+  * It registers the native kernels' SQL names (`hamming_distance`,
+  * `dot_product`, `squared_distance`); this is the one way they enter a
+  * session's function registry.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -30,8 +30,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("squared_distance"),
       new ExpressionInfo(classOf[SquaredDistance].getName, "squared_distance"),
       (exprs: Seq[Expression]) => SquaredDistance(exprs(0), exprs(1))))
-    // declarative aggregate(zip_with(...)) dot-product folds → native
-    // codegen'd DotProduct (bit-preserving; see NativeDotProductRule)
-    ext.injectOptimizerRule(_ => graft.plans.NativeDotProductRule)
   }
 }

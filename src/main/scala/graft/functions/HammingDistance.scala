@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.GraftSqlBridge
@@ -46,9 +46,4 @@ object HammingDistance {
   def hamming_distance(a: Column, b: Column): Column =
     GraftSqlBridge.column(
       HammingDistance(GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
-
-  /** SQL registration: `SELECT hamming_distance(a, b)` after calling this. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hamming_distance", exprs => HammingDistance(exprs(0), exprs(1)), "scala_udf")
 }

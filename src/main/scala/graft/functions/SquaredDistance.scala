@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -22,9 +22,7 @@ import org.apache.spark.sql.types._
   * inside whole-stage codegen.
   *
   * Semantics: null input array → null; null element → null; length
-  * mismatch → null (the zip_with null-pad, exactly as in [[DotProduct]]),
-  * so [[graft.plans.NativeDotProductRule]] may substitute it for the fold
-  * unconditionally.
+  * mismatch → null (the zip_with null-pad, exactly as in [[DotProduct]]).
   */
 case class SquaredDistance(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -114,8 +112,4 @@ object SquaredDistance {
   def squared_distance(a: Column, b: Column): Column =
     GraftSqlBridge.column(
       SquaredDistance(GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "squared_distance", exprs => SquaredDistance(exprs(0), exprs(1)), "scala_udf")
 }

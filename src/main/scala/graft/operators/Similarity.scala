@@ -8,10 +8,11 @@ import graft.core.QueryDef.sql
 /** Similarity search over the `embeddings` table (64-dim float vectors).
   *
   * Cross-engine float discipline: dot products are sequential left folds in
-  * index order on BOTH engines — Spark `aggregate(zip_with(a,b,*), 0.0, +)`
-  * and DuckDB `list_reduce(list_transform(list_zip(a,b), *), +)` perform the
-  * identical IEEE op sequence (fold of double products, ascending index), so
-  * cosines are bit-identical and safe to sort on and round.
+  * index order on BOTH engines — Spark's native `dot_product` kernel
+  * ([[graft.functions.DotProduct]]) and DuckDB
+  * `list_reduce(list_transform(list_zip(a,b), *), +)` perform the identical
+  * IEEE op sequence (fold of double products, ascending index), so cosines
+  * are bit-identical and safe to sort on and round.
   *
   * Scale notes (100 TB): brute-force top-k is one broadcast of the query
   * vector + a map-side partial top-k (TakeOrderedAndProject — no full sort).
@@ -22,10 +23,10 @@ import graft.core.QueryDef.sql
   */
 object Similarity {
 
-  /** dot(a,b) — native codegen'd expression (graft.functions.DotProduct):
-    * same strict index-order double accumulation as the SQL fold below (and
-    * bit-identical to it), but compiled to a primitive loop instead of
-    * per-element interpreted lambdas. */
+  /** dot(a,b) — Spark side of the index-order fold contract: the native
+    * codegen'd `dot_product` kernel (graft.functions.DotProduct), the same
+    * strict ascending-index double accumulation as the DuckDB fold below
+    * (and bit-identical to it), compiled to a primitive loop. */
   private def dotCol(a: String, b: String) =
     graft.functions.DotProduct.dot_product(col(a), col(b))
 
@@ -1586,12 +1587,10 @@ object Similarity {
     // keeps generated code tiny (see the IVF codegen lesson)
     val planes = hyperplaneSignature().zipWithIndex
       .map { case (p, j) => (j, p.toSeq) }.toSeq.toDF("bit", "plane")
-    val dot = aggregate(
-      zip_with(col("embedding"), col("plane"), (x, c) => x.cast("double") * c),
-      lit(0.0), (acc, v) => acc + v)
     Tables.embeddings(s, d)
       .crossJoin(broadcast(planes))
-      .select(col("vec_id"), col("label"), col("bit"), dot.as("dot"))
+      .select(col("vec_id"), col("label"), col("bit"),
+        dotCol("embedding", "plane").as("dot"))
       .groupBy("vec_id")
       .agg(
         first("label").as("label"),

@@ -3,23 +3,44 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.catalyst.expressions.ArrayAggregate
 import graft.core.Tables
+import graft.functions.DotProduct
 import graft.functions.DotProduct.dot_product
 
 class DotProductSpec extends AnyFunSuite {
   lazy val spark: SparkSession = Tables.localSession("dot-spec", cores = 8)
   val sf = "/root/testdata/sf0.001"
 
-  test("bit-identical to the aggregate(zip_with(...)) fold on real embeddings") {
+  private val foldSql =
+    "aggregate(zip_with(embedding, qv, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), " +
+      "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
+
+  /** Every embedding against vec_id 0's: the kernel equals the fold bit for
+    * bit, and the fold is evaluated as a fold, not replaced by the kernel. */
+  private def assertMatchesFold(): Unit = {
     val emb = Tables.embeddings(spark, sf)
     val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
-    val both = emb.crossJoin(broadcast(q)).select(
-      dot_product(col("embedding"), col("qv")).as("native"),
-      expr("aggregate(zip_with(embedding, qv, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), " +
-        "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)").as("fold"))
+    val pairs = emb.crossJoin(broadcast(q))
+    val foldPlan = pairs.select(expr(foldSql)).queryExecution.optimizedPlan
+    val foldExprs = foldPlan.flatMap(_.expressions.flatMap(_.collect { case e => e }))
+    assert(foldExprs.exists(_.isInstanceOf[ArrayAggregate]) &&
+      !foldExprs.exists(_.isInstanceOf[DotProduct]), s"reference is not a fold:\n$foldPlan")
+    val both = pairs.select(
+      dot_product(col("embedding"), col("qv")).as("native"), expr(foldSql).as("fold"))
     // bit-level agreement, not epsilon: same IEEE op sequence
     assert(both.filter(col("native") =!= col("fold")).count() == 0)
     assert(both.filter(col("native").isNull).count() == 0)
+  }
+
+  test("bit-identical to the aggregate(zip_with(...)) fold on real embeddings") {
+    assertMatchesFold()
+    // and the interpreted kernel (nullSafeEval, no generated code anywhere)
+    val confs = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try assertMatchesFold()
+    finally confs.foreach { case (k, _) => spark.conf.unset(k) }
   }
 
   test("null array → null; mismatched lengths → null (zip_with null-pad semantics)") {
@@ -50,7 +71,7 @@ class DotProductSpec extends AnyFunSuite {
   }
 
   test("SQL registration via function registry") {
-    graft.functions.DotProduct.register(spark)
+    // the session's GraftExtensions registered the SQL name
     Tables.embeddings(spark, sf).createOrReplaceTempView("emb_dot")
     val r = spark.sql(
       "SELECT dot_product(embedding, embedding) AS n2 FROM emb_dot LIMIT 5").collect()

@@ -4,7 +4,6 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.Tables
-import graft.functions.HammingDistance
 import graft.functions.HammingDistance.hamming_distance
 
 class HammingDistanceSpec extends AnyFunSuite {
@@ -19,7 +18,7 @@ class HammingDistanceSpec extends AnyFunSuite {
     val got = df.select(hamming_distance($"a", $"b").as("d"), $"expected").collect()
     got.foreach(r => assert(r.getInt(0) == r.getInt(1)))
 
-    HammingDistance.register(spark)
+    // the session's GraftExtensions registered the SQL name
     df.createOrReplaceTempView("hd_in")
     val sqlGot = spark.sql("SELECT hamming_distance(a, b) AS d, expected FROM hd_in").collect()
     sqlGot.foreach(r => assert(r.getInt(0) == r.getInt(1)))

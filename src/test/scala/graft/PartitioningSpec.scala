@@ -83,9 +83,19 @@ class PartitioningSpec extends AnyFunSuite with TempDirs {
   }
 
   test("GraftExtensions registers native functions via injectFunction") {
-    val ext = new graft.functions.GraftExtensions
-    ext(new org.apache.spark.sql.SparkSessionExtensions) // must not throw
-    // end-to-end registration path is covered by HammingDistanceSpec's
-    // FunctionRegistry test; extensions share the same builder
+    import spark.implicits._
+    import graft.functions.{DotProduct, HammingDistance, SquaredDistance}
+    Seq((Seq(1.0f, 2.0f), Seq(3.0f, 6.0f), 0xffL, 0L),
+        (Seq(0.5f, -1.0f), Seq(2.0f, 1.0f), 0xaL, 0x5L))
+      .toDF("a", "b", "h", "g").createOrReplaceTempView("ext_in")
+    val df = spark.sql("SELECT dot_product(a, b) AS dot, squared_distance(a, b) AS d2, " +
+      "hamming_distance(h, g) AS hd FROM ext_in")
+    val analyzed = df.queryExecution.analyzed
+    val resolved = analyzed.flatMap(_.expressions.flatMap(_.collect { case e => e.getClass }))
+    Seq(classOf[DotProduct], classOf[SquaredDistance], classOf[HammingDistance]).foreach(c =>
+      assert(resolved.contains(c), s"${c.getSimpleName} not in:\n$analyzed"))
+    // 1*3+2*6, (1-3)²+(2-6)², popcount(0xff); 0.5*2-1*1, 1.5²+2², popcount(0xf)
+    assert(df.collect().map(r => (r.getDouble(0), r.getDouble(1), r.getInt(2))).toSeq ==
+      Seq((15.0, 20.0, 8), (0.0, 6.25, 4)))
   }
 }

@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.catalyst.expressions.ArrayAggregate
 import graft.core.Tables
+import graft.functions.SquaredDistance
 import graft.functions.SquaredDistance.squared_distance
 
 class SquaredDistanceSpec extends AnyFunSuite {
@@ -14,17 +16,32 @@ class SquaredDistanceSpec extends AnyFunSuite {
     "aggregate(zip_with(a, b, (x, c) -> (CAST(x AS DOUBLE) - CAST(c AS DOUBLE)) * " +
       "(CAST(x AS DOUBLE) - CAST(c AS DOUBLE))), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
 
-  test("bit-identical to the aggregate(zip_with(...)) fold on real embeddings") {
+  /** Every embedding against vec_id 0's: the kernel equals the fold bit for
+    * bit, and the fold is evaluated as a fold, not replaced by the kernel. */
+  private def assertMatchesFold(): Unit = {
     val emb = Tables.embeddings(spark, sf)
     val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
-    val both = emb.crossJoin(broadcast(q))
+    val pairs = emb.crossJoin(broadcast(q))
       .select(col("embedding").as("a"), col("qv").as("b"))
-      .select(
-        squared_distance(col("a"), col("b")).as("native"),
-        expr(foldSql).as("fold"))
+    val foldPlan = pairs.select(expr(foldSql)).queryExecution.optimizedPlan
+    val foldExprs = foldPlan.flatMap(_.expressions.flatMap(_.collect { case e => e }))
+    assert(foldExprs.exists(_.isInstanceOf[ArrayAggregate]) &&
+      !foldExprs.exists(_.isInstanceOf[SquaredDistance]), s"reference is not a fold:\n$foldPlan")
+    val both = pairs.select(
+      squared_distance(col("a"), col("b")).as("native"), expr(foldSql).as("fold"))
     // bit-level agreement, not epsilon: same IEEE op sequence
     assert(both.filter(col("native") =!= col("fold")).count() == 0)
     assert(both.filter(col("native").isNull).count() == 0)
+  }
+
+  test("bit-identical to the aggregate(zip_with(...)) fold on real embeddings") {
+    assertMatchesFold()
+    // and the interpreted kernel (nullSafeEval, no generated code anywhere)
+    val confs = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try assertMatchesFold()
+    finally confs.foreach { case (k, _) => spark.conf.unset(k) }
   }
 
   test("null array → null; mismatched lengths → null (zip_with null-pad semantics)") {
@@ -51,22 +68,5 @@ class SquaredDistanceSpec extends AnyFunSuite {
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("*("), s"fell out of codegen:\n$plan")
-  }
-
-  test("optimizer rule rewrites the declarative squared-distance fold to the native expression") {
-    val emb = Tables.embeddings(spark, sf)
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("b"))
-    val df = emb.crossJoin(broadcast(q)).withColumnRenamed("embedding", "a")
-      .selectExpr("vec_id", s"$foldSql AS d2")
-    val rewritten = graft.plans.NativeDotProductRule(df.queryExecution.optimizedPlan)
-    assert(rewritten.expressions.exists(
-      _.exists(_.isInstanceOf[graft.functions.SquaredDistance])),
-      s"no SquaredDistance after rewrite:\n$rewritten")
-    // and the rewrite is value-preserving: native vs plain fold, bit-level
-    val expected = df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val native = emb.crossJoin(broadcast(q))
-      .select(col("vec_id"), squared_distance(col("embedding"), col("b")).as("d2"))
-      .collect()
-    native.foreach(r => assert(r.getDouble(1) == expected(r.getLong(0))))
   }
 }
