@@ -11,7 +11,6 @@ import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types.{BooleanType, DataType, StringType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.util.sketch.BloomFilter
 
 /** The exact-shingle contamination keys: the xxhash64 (seed 42) of every
   * 8-token window of a text, hashed straight from its UTF-8 bytes.
@@ -26,9 +25,9 @@ import org.apache.spark.util.sketch.BloomFilter
   * ever encodes a space, so byte and character splits agree. A text with
   * fewer than 8 tokens has no windows.
   *
-  * The build side (the eval set's bloom, built on the driver by
-  * [[graft.streaming.Jobs.contaminationBloom]]) and the probe side
-  * ([[ShingleBloomProbe]], per streamed doc) both call [[windowHashes]], so
+  * The build side (the eval set's sorted distinct keys, built on the
+  * driver by [[graft.streaming.Jobs.contaminationKeys]]) and the probe side
+  * ([[ShingleKeyProbe]], per streamed doc) both call [[windowHashes]], so
   * the two cannot fork. */
 object ShingleHashes {
   val Width = 8
@@ -66,56 +65,58 @@ object ShingleHashes {
     out
   }
 
-  /** might_contain_shingle(text, bloom) — true when some window key of
-    * `text` might be in the bloom; false for a null or short text. */
-  def might_contain_shingle(text: Column, bloom: Broadcast[BloomFilter]): Column =
-    GraftSqlBridge.column(ShingleBloomProbe(GraftSqlBridge.expression(text), bloom))
+  /** contains_shingle(text, keys) — true when some window key of `text` is
+    * in the sorted `keys`; false for a null or short text. */
+  def contains_shingle(text: Column, keys: Broadcast[Array[Long]]): Column =
+    GraftSqlBridge.column(ShingleKeyProbe(GraftSqlBridge.expression(text), keys))
 }
 
-/** Probes a broadcast shingle bloom with one text's [[ShingleHashes]] keys,
-  * as one code-generating Catalyst expression: true when some window might
-  * be in the bloom, false for a null text or one under 8 tokens (such a doc
-  * is kept by a gate that filters on `!probe`).
+/** Probes a broadcast sorted key array with one text's [[ShingleHashes]]
+  * keys, as one code-generating Catalyst expression: one binary search per
+  * window, stopping at the first hit. True when some window key is in the
+  * array, false for a null text or one under 8 tokens (such a doc is kept
+  * by a gate that filters on `!probe`). The check is exact: no key outside
+  * the array ever matches.
   *
-  * The expression holds the `Broadcast` handle, not the filter, so a task
-  * binary carries only the handle; each task reads the filter from the
+  * The expression holds the `Broadcast` handle, not the array, so a task
+  * binary carries only the handle; each task reads the array from the
   * block manager once. */
-case class ShingleBloomProbe(child: Expression, bloom: Broadcast[BloomFilter])
+case class ShingleKeyProbe(child: Expression, keys: Broadcast[Array[Long]])
     extends UnaryExpression {
 
   override def nullable: Boolean = false
   override def dataType: DataType = BooleanType
-  override def prettyName: String = "might_contain_shingle"
+  override def prettyName: String = "contains_shingle"
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"might_contain_shingle requires string, got ${child.dataType.sql}")
+      s"contains_shingle requires string, got ${child.dataType.sql}")
 
-  @transient private lazy val filter: BloomFilter = bloom.value
+  @transient private lazy val sorted: Array[Long] = keys.value
 
   /** Public: invoked from generated code via a bound reference. */
-  def mightContain(text: UTF8String): Boolean = {
+  def contains(text: UTF8String): Boolean = {
     val hs = ShingleHashes.windowHashes(text)
     var i = 0
-    while (i < hs.length && !filter.mightContainLong(hs(i))) i += 1
+    while (i < hs.length && java.util.Arrays.binarySearch(sorted, hs(i)) < 0) i += 1
     i < hs.length
   }
 
   override def eval(input: InternalRow): Any = {
     val v = child.eval(input)
-    v != null && mightContain(v.asInstanceOf[UTF8String])
+    v != null && contains(v.asInstanceOf[UTF8String])
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("shingleProbe", this, classOf[ShingleBloomProbe].getName)
+    val ref = ctx.addReferenceObj("shingleProbe", this, classOf[ShingleKeyProbe].getName)
     val c = child.genCode(ctx)
     ev.copy(code = code"""
       |${c.code}
-      |boolean ${ev.value} = !${c.isNull} && $ref.mightContain(${c.value});""".stripMargin,
+      |boolean ${ev.value} = !${c.isNull} && $ref.contains(${c.value});""".stripMargin,
       isNull = FalseLiteral)
   }
 
-  override protected def withNewChildInternal(newChild: Expression): ShingleBloomProbe =
+  override protected def withNewChildInternal(newChild: Expression): ShingleKeyProbe =
     copy(child = newChild)
 }

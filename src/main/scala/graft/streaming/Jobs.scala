@@ -538,40 +538,33 @@ object Jobs {
     * arrival-time twin of the batch `decontam_ngram` check, so contaminated
     * crawl pages never even land in the corpus.
     *
-    * The eval set is compiled ONCE, on the driver, into a bloom filter of
-    * its shingle keys ([[contaminationBloom]]; `expectedItems` sizes it)
-    * and broadcast once. Each micro-batch then runs one code-generating
-    * probe per doc ([[graft.functions.ShingleBloomProbe]]) in the map stage
-    * — no stream-static join, no state store, no per-batch scan of the
-    * eval table. A doc with a null text or under 8 tokens has no shingle
-    * and is kept. A bloom hit only MIGHT be contamination (fpp), so the
-    * gate is conservative in the safe direction: it can drop an extra
-    * clean doc, never keep a dirty one. */
-  def contaminationGate(docs: DataFrame, evalTexts: DataFrame,
-      expectedItems: Long = 1000000L, fpp: Double = 0.01): DataFrame = {
-    val bloom = docs.sparkSession.sparkContext.broadcast(
-      contaminationBloom(evalTexts, expectedItems, fpp))
-    docs.filter(!graft.functions.ShingleHashes.might_contain_shingle(col("text"), bloom))
+    * The eval set is compiled ONCE, on the driver, into the sorted distinct
+    * keys of its shingles ([[contaminationKeys]]) and broadcast once: 8
+    * bytes per distinct eval key on the driver and in the broadcast (4.2 KB
+    * for 520 keys). Each micro-batch then runs one code-generating probe
+    * per doc ([[graft.functions.ShingleKeyProbe]]) in the map stage — no
+    * stream-static join, no state store, no per-batch scan of the eval
+    * table. The gate is exact, like `decontam_ngram`: a doc is dropped only
+    * if one of its window keys is an eval key. A doc with a null text or
+    * under 8 tokens has no shingle and is kept. */
+  def contaminationGate(docs: DataFrame, evalTexts: DataFrame): DataFrame = {
+    val keys = docs.sparkSession.sparkContext.broadcast(contaminationKeys(evalTexts))
+    docs.filter(!graft.functions.ShingleHashes.contains_shingle(col("text"), keys))
   }
 
-  /** The eval set's shingle bloom, built on the driver: the `text` column
-    * is collected and every window key of [[graft.functions.ShingleHashes]]
-    * is put into `BloomFilter.create(expectedItems, fpp)`. Over a local
-    * eval frame this starts no Spark job. The collect holds the eval texts
-    * on the driver once: benchmark suites are tiny relative to a
-    * web-scale train corpus, so this is the MODEL, not the corpus — the
-    * same bound as [[freezeBandIndex]]. */
-  def contaminationBloom(evalTexts: DataFrame, expectedItems: Long,
-      fpp: Double): org.apache.spark.util.sketch.BloomFilter = {
-    val bloom = org.apache.spark.util.sketch.BloomFilter.create(expectedItems, fpp)
-    evalTexts.select("text").collect().foreach { r =>
-      if (!r.isNullAt(0))
-        graft.functions.ShingleHashes.windowHashes(
-          org.apache.spark.unsafe.types.UTF8String.fromString(r.getString(0)))
-          .foreach(bloom.putLong)
-    }
-    bloom
-  }
+  /** The eval set's shingle keys, built on the driver: the `text` column is
+    * collected and every window key of [[graft.functions.ShingleHashes]] is
+    * kept once, in ascending order. Over a local eval frame this starts no
+    * Spark job. The collect holds the eval texts on the driver once:
+    * benchmark suites are tiny relative to a web-scale train corpus, so
+    * this is the MODEL, not the corpus — the same bound as
+    * [[freezeBandIndex]]. */
+  def contaminationKeys(evalTexts: DataFrame): Array[Long] =
+    evalTexts.select("text").collect().flatMap { r =>
+      if (r.isNullAt(0)) Array.emptyLongArray
+      else graft.functions.ShingleHashes.windowHashes(
+        org.apache.spark.unsafe.types.UTF8String.fromString(r.getString(0)))
+    }.distinct.sorted
 
   /** Per-document MinHash band keys as a COLUMN — the ONE streaming-side
     * definition of the dedup family's signature/band chain (word-trigram
@@ -614,9 +607,9 @@ object Jobs {
     * and each micro-batch runs a stateless executor-side filter over the
     * doc's 4 band keys — no stream-static join, no state store, no
     * shuffle. A band hit only MIGHT be true contamination (LSH candidate
-    * probability), so like the bloom gate it is conservative in the safe
-    * direction: it can drop an extra clean doc, never keep a near-dup of
-    * the benchmark. Input needs a `text` column. */
+    * probability), so, unlike the exact-shingle gate, it is conservative
+    * in the safe direction: it can drop an extra clean doc, never keep a
+    * near-dup of the benchmark. Input needs a `text` column. */
   def minhashGate(docs: DataFrame, bandIndex: Set[String]): DataFrame = {
     val idxB = docs.sparkSession.sparkContext.broadcast(bandIndex)
     val anyHit = udf((ks: Seq[String]) =>
@@ -629,8 +622,9 @@ object Jobs {
     * streaming pieces the batch stages twin individually, in this order:
     *
     *   1. quality gate (the stateless filter of [[documentIngest]]);
-    *   2. decontamination ([[contaminationGate]] — broadcast bloom over the
-    *      static eval set, one native probe per doc);
+    *   2. decontamination ([[contaminationGate]] — the static eval set's
+    *      sorted shingle keys, broadcast at 8 B per key, one native probe
+    *      per doc);
     *   3. content hash `h`, watermark and `dropDuplicatesWithinWatermark`
     *      ([[streamingDedup]]);
     *   4. `n_tokens`.

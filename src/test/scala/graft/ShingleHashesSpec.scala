@@ -11,14 +11,16 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.Tables
-import graft.functions.{ShingleBloomProbe, ShingleHashes}
+import graft.functions.{ShingleHashes, ShingleKeyProbe}
 import graft.streaming.Jobs
 
 /** The contamination gate's shingle keys ([[graft.functions.ShingleHashes]])
   * must equal Spark's `xxhash64(concat_ws(' ', slice(split(text, ' '), ...)))`
-  * lambda, its driver-built bloom must equal `stat.bloomFilter`'s, building
-  * the gate must start no Spark job, and the planned curation stream must
-  * gate in the map stage with no UDF or higher-order function. */
+  * lambda, its driver-built key array must equal the lambda's sorted
+  * distinct keys, the gate must keep exactly the docs none of whose keys is
+  * an eval key, building the gate must start no Spark job, and the planned
+  * curation stream must gate in the map stage with no UDF or higher-order
+  * function. */
 class ShingleHashesSpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = Tables.localSession("shingle-hashes-spec", cores = 4)
 
@@ -65,32 +67,59 @@ class ShingleHashesSpec extends AnyFunSuite with TempDirs {
 
   test("the probe keeps null and short texts and drops a bloom hit, codegen and interpreted") {
     import spark.implicits._
-    val bloom = spark.sparkContext.broadcast(Jobs.contaminationBloom(
-      Seq(words(8), "a  b c d e f g h i", null).toDF("text"), 1000L, 0.01))
+    val keys = spark.sparkContext.broadcast(Jobs.contaminationKeys(
+      Seq(words(8), "a  b c d e f g h i", null).toDF("text")))
     val docs = Seq[(Long, String)](1L -> null, 2L -> words(7), 3L -> "", 4L -> words(9),
       5L -> ("x " + words(8)), 6L -> "a  b c d e f g h i", 7L -> words(12, "clean"))
       .toDF("id", "text")
-    val kept = docs.filter(!ShingleHashes.might_contain_shingle(col("text"), bloom))
+    val kept = docs.filter(!ShingleHashes.contains_shingle(col("text"), keys))
       .collect().map(_.getLong(0)).toSet
     assert(kept == Set(1L, 2L, 3L, 7L), kept)
-    val probe = ShingleBloomProbe(Literal(null, org.apache.spark.sql.types.StringType), bloom)
+    val probe = ShingleKeyProbe(Literal(null, org.apache.spark.sql.types.StringType), keys)
     assert(probe.eval(InternalRow.empty) == false)
     def interpreted(t: String) =
-      ShingleBloomProbe(Literal(t), bloom).eval(InternalRow.empty)
+      ShingleKeyProbe(Literal(t), keys).eval(InternalRow.empty)
     assert(interpreted(words(9)) == true && interpreted(words(7)) == false &&
       interpreted(words(12, "clean")) == false)
   }
 
-  test("the driver-built bloom equals stat.bloomFilter's over the lambda keys") {
+  test("the driver-built keys equal the sorted distinct lambda keys") {
     import spark.implicits._
-    def sparkBloom(eval: DataFrame, n: Long, fpp: Double) =
-      eval.select(explode(lambdaKeys).as("k")).stat.bloomFilter("k", n, fpp)
     val sets = (1L to 5L).map(perfbenchEval) :+ (edgeTexts ++ randomTexts(5, 500))
-    for (texts <- sets; (n, fpp) <- Seq((1000000L, 0.01), (1000L, 0.03))) {
+    for (texts <- sets) {
       val eval = texts.toDF("text")
-      assert(Jobs.contaminationBloom(eval, n, fpp) == sparkBloom(eval, n, fpp),
-        s"bloom forked at expectedItems=$n fpp=$fpp")
+      val ref = eval.select(explode(lambdaKeys).as("k")).distinct()
+        .collect().map(_.getLong(0)).sorted
+      assert(Jobs.contaminationKeys(eval).toSeq == ref.toSeq)
     }
+  }
+
+  test("the gate keeps exactly the docs whose window keys miss the eval keys, codegen and interpreted") {
+    import spark.implicits._
+    // the first 50 random docs are eval texts too, so random docs hit as well
+    val evalTexts = perfbenchEval(1) ++ randomTexts(13, 50)
+    val rnd = new scala.util.Random(17)
+    val embedded = perfbenchEval(1).map { t =>
+      val ws = t.split(' ')
+      val at = rnd.nextInt(ws.length - 7)
+      (words(rnd.nextInt(4), "pre") +: ws.slice(at, at + 8) :+ words(3, "post")).mkString(" ")
+    }
+    val texts = (edgeTexts ++ randomTexts(13, 3000) ++ embedded :+ null).toIndexedSeq
+    val evalKeys = evalTexts.flatMap(t => ShingleHashes.windowHashes(UTF8String.fromString(t))).toSet
+    val expected = texts.indices.filter { i =>
+      texts(i) == null ||
+        !ShingleHashes.windowHashes(UTF8String.fromString(texts(i))).exists(evalKeys)
+    }.map(_.toLong).toSet
+    assert(expected.size < texts.size - embedded.size - 10 && expected.size > texts.size / 2)
+    val docs = texts.indices.map(i => (i.toLong, texts(i))).toDF("id", "text")
+    val eval = evalTexts.toDF("text")
+    def kept = Jobs.contaminationGate(docs, eval).collect().map(_.getLong(0)).toSet
+    assert(kept == expected)
+    val confs = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try assert(kept == expected)
+    finally confs.foreach { case (k, _) => spark.conf.unset(k) }
   }
 
   test("building the contamination gate over a local eval frame starts no Spark job") {
@@ -153,10 +182,10 @@ class ShingleHashesSpec extends AnyFunSuite with TempDirs {
     def filters(p: SparkPlan) = p.collect { case f: FilterExec => f.condition }
     assert(filters(plan).size == filters(below).size, s"a filter sits above the shuffle: $plan")
     val gates = filters(below).flatMap(_.collect { case e => e })
-    assert(gates.count(_.isInstanceOf[ShingleBloomProbe]) == 1, plan.toString)
+    assert(gates.count(_.isInstanceOf[ShingleKeyProbe]) == 1, plan.toString)
     assert(gates.exists(_.isInstanceOf[RegExpReplace]), plan.toString)
     val inCodegen = below.collect { case w: WholeStageCodegenExec => w.child }
-      .flatMap(exprs).exists(_.isInstanceOf[ShingleBloomProbe])
+      .flatMap(exprs).exists(_.isInstanceOf[ShingleKeyProbe])
     assert(inCodegen, plan.toString)
   }
 }

@@ -605,8 +605,7 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     val evalSet = Seq(s"prefix words then $benchGram and a suffix")
       .toDF("text")
     val mem = MemoryStream[(Long, String)]
-    val gated = Jobs.contaminationGate(
-      mem.toDF().toDF("id", "text"), evalSet, expectedItems = 1000L)
+    val gated = Jobs.contaminationGate(mem.toDF().toDF("id", "text"), evalSet)
     val q = gated.writeStream.format("memory").queryName("decontam_gate")
       .outputMode("append").start()
     mem.addData(
