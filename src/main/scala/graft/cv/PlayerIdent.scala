@@ -138,14 +138,16 @@ object PlayerIdent {
 
   // ------------------------------------------------------------- pipeline
 
+  // digit-detector probability a proposal must exceed, and the IoU above
+  // which NMS suppresses the weaker box (dl_k_to_ss.py:48-63)
+  private val DetectThreshold = 0.5
+  private val NmsThreshold = 0.1
+
   final case class Config(
       decoder: ImageDecoder = StubDecoder,
       pose: PoseEstimator = StubPose,
       regions: RegionProposer = StubRegions,
       classifier: PatchClassifier = StubClassifier,
-      detectThreshold: Double = 0.5, // dl_k_to_ss.py:48-63
-      nmsThreshold: Double = 0.1,
-      denoise: Boolean = true, // M12: box denoise before digit spotting (dl_k_to_ss.py:320)
       teams: Seq[(String, (Int, Int, Int))] = Seq(
         ("team_a", (245, 232, 230)), ("team_b", (27, 48, 157))))
 
@@ -169,11 +171,11 @@ object PlayerIdent {
     val proposals = cfg.regions.propose(img, crop).toIndexedSeq
     if (proposals.isEmpty) return None
     val probs = proposals.map(b => cfg.classifier.detectProb(img, b))
-    val passing = proposals.indices.filter(i => probs(i) > cfg.detectThreshold)
+    val passing = proposals.indices.filter(i => probs(i) > DetectThreshold)
     if (passing.isEmpty) return None
     val pb = passing.map(proposals).toIndexedSeq
     val pp = passing.map(probs).toIndexedSeq
-    val kept = nms(pb, pp, cfg.nmsThreshold)
+    val kept = nms(pb, pp, NmsThreshold)
     val keptBoxes = kept.map(pb)
     val digits = keptBoxes.map(b => cfg.classifier.recognize(img, b))
     composeDigits(keptBoxes, digits)
@@ -205,7 +207,8 @@ object PlayerIdent {
   def identifyPlayers(bytes: Array[Byte], cfg: Config): Seq[(String, Int)] =
     cfg.decoder.decode(bytes).toSeq.flatMap { raw =>
       // M12: denoise once per image before the per-person digit/color stages
-      val img = if (cfg.denoise) Heatmaps.boxDenoise(raw) else raw
+      // (dl_k_to_ss.py:320)
+      val img = Heatmaps.boxDenoise(raw)
       cfg.pose.estimate(img).flatMap { person =>
         val gateOk = (for {
           neck <- person.keypoints(1)

@@ -2766,16 +2766,19 @@ object Similarity {
   /** One power-iteration round `pv${k-1} → pv$k` as oracle CTEs: score
     * s_i = cx·v (BIGINT), back-projection u_pos = Σ s_i·cx (HUGEINT),
     * then renormalize to max|v| = 2²⁰ via an exact max and one
-    * floor(double) both engines compute identically. */
+    * floor(double) both engines compute identically. The chained CTEs are
+    * MATERIALIZED: `pv$k` reads `pu$k` twice (directly and through
+    * `pm$k`), so an engine that inlines CTEs evaluates round 1 2^k times
+    * by round k (the [[CvOracle]] discipline). */
   private def pcaRoundSqlCte(k: Int): String =
-    s"""ps$k AS (SELECT c.vec_id, sum(c.cx * v.vv) AS s
+    s"""ps$k AS MATERIALIZED (SELECT c.vec_id, sum(c.cx * v.vv) AS s
        |         FROM pcc c JOIN pv${k - 1} v ON v.pos = c.pos
        |         GROUP BY c.vec_id),
-       |pu$k AS (SELECT c.pos, sum(CAST(s.s AS HUGEINT) * c.cx) AS u
+       |pu$k AS MATERIALIZED (SELECT c.pos, sum(CAST(s.s AS HUGEINT) * c.cx) AS u
        |         FROM pcc c JOIN ps$k s ON s.vec_id = c.vec_id
        |         GROUP BY c.pos),
        |pm$k AS (SELECT max(abs(u)) AS m FROM pu$k),
-       |pv$k AS (SELECT u.pos,
+       |pv$k AS MATERIALIZED (SELECT u.pos,
        |                CAST(floor(CAST(u.u AS DOUBLE) * $PcaFp
        |                           / CAST(g.m AS DOUBLE)) AS BIGINT) AS vv
        |         FROM pu$k u CROSS JOIN pm$k g)""".stripMargin
@@ -2791,7 +2794,7 @@ object Similarity {
        |pcmu AS (SELECT pos, CAST(floor(CAST(sum(xv) AS DOUBLE) / count(*))
        |                          AS BIGINT) AS mu
        |         FROM pcx GROUP BY pos),
-       |pcc AS (SELECT x.vec_id, x.pos, x.xv - m.mu AS cx
+       |pcc AS MATERIALIZED (SELECT x.vec_id, x.pos, x.xv - m.mu AS cx
        |        FROM pcx x JOIN pcmu m ON m.pos = x.pos),
        |pv0 AS (SELECT DISTINCT pos, CAST($PcaFp AS BIGINT) AS vv FROM pcx)""".stripMargin
 

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.ml.PipelineModel
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.HDFSMetadataLog
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
@@ -514,22 +515,21 @@ object Jobs {
   /** End-to-end streaming DOCUMENT INGEST — the streaming shape of the
     * batch training-data pipeline: cheap stateless quality gate FIRST
     * (length + alphabetic-ratio, so junk never reaches the state store),
-    * then watermark-bounded exact dedup, then the enrichment columns the
-    * batch operators key on (token count, content hash). Pure
-    * `DataFrame => DataFrame`: the same plan runs in batch or behind a
-    * Kafka source/sink. Input needs (`text`, event-time `ts`). */
-  def documentIngest(docs: DataFrame, minTokens: Int = 5,
-      delay: String = "10 minutes"): DataFrame =
-    qualityGate(docs, minTokens)
-      .transform(streamingDedup(_, "text", "ts", delay))
+    * then exact dedup bounded by a 10-minute watermark, then the
+    * enrichment columns the batch operators key on (token count, content
+    * hash). Pure `DataFrame => DataFrame`: the same plan runs in batch or
+    * behind a Kafka source/sink. Input needs (`text`, event-time `ts`). */
+  def documentIngest(docs: DataFrame): DataFrame =
+    qualityGate(docs)
+      .transform(streamingDedup(_, "text", "ts"))
       .withColumn("n_tokens", tokenCount)
 
   private def tokenCount: Column = size(split(col("text"), " "))
 
-  /** The stateless quality gate: at least `minTokens` space-split tokens
-    * and at least half the characters alphabetic. */
-  private def qualityGate(docs: DataFrame, minTokens: Int): DataFrame =
-    docs.filter(tokenCount >= minTokens &&
+  /** The stateless quality gate: at least 5 space-split tokens and at
+    * least half the characters alphabetic. */
+  private def qualityGate(docs: DataFrame): DataFrame =
+    docs.filter(tokenCount >= 5 &&
       length(regexp_replace(col("text"), "[^a-zA-Z]", "")) * 1.0 >=
         length(col("text")) * 0.5)
 
@@ -577,7 +577,12 @@ object Jobs {
     * hit, i.e. every doc that query emits a row for (n_windows >= 2), NOT
     * only its flagged >= 6/8 subset; the gate is deliberately conservative
     * in that direction (see [[minhashGate]]'s any-band-hit semantics). */
-  private def bandKeys(text: Column): Column = {
+  private def bandKeys(text: Column): Column =
+    overBands(text, array().cast("array<string>"))(bs => array(bs: _*))
+
+  /** `onBands` over a doc's 4 band-key columns, or `short` for a doc with
+    * no shingles: the guard keeps an empty signature from being indexed. */
+  private def overBands(text: Column, short: Column)(onBands: Seq[Column] => Column): Column = {
     // native per-row window minima (one compiled loop per doc) instead of
     // 8 interpreted array_min(transform(...)) passes — bit-identical to
     // the lambda construction (MinhashSigsSpec) and to the batch chain
@@ -586,14 +591,13 @@ object Jobs {
     val mh = (0 until 8).map(j => ms.getItem(j))
     val bands = (0 until 4).map(b =>
       concat(lit(s"$b:"), md5(concat(mh(2 * b), mh(2 * b + 1)))))
-    when(size(ms) > 0, array(bands: _*))
-      .otherwise(array().cast("array<string>"))
+    when(size(ms) > 0, onBands(bands)).otherwise(short)
   }
 
   /** Freeze the eval benchmark set's MinHash band index into the Set the
-    * streaming gate broadcasts. Benchmark suites are tiny relative to a
-    * web-scale train corpus — this collect is the MODEL (4 keys per eval
-    * doc), not the corpus, the same justification as [[freezeDsir]]. */
+    * streaming gate tests membership in. Benchmark suites are tiny relative
+    * to a web-scale train corpus — this collect is the MODEL (4 keys per
+    * eval doc), not the corpus, the same justification as [[freezeDsir]]. */
   def freezeBandIndex(evalTexts: DataFrame): Set[String] =
     evalTexts.select(explode(bandKeys(col("text"))).as("k"))
       .distinct().collect().map(_.getString(0)).toSet
@@ -603,18 +607,18 @@ object Jobs {
     * share a MinHash LSH band with ANY frozen eval document — the
     * near-duplicate leak the exact-shingle [[contaminationGate]] misses
     * when the benchmark copy was paraphrased, re-tokenized or truncated.
-    * The frozen band index is broadcast (kilobytes per thousand eval docs)
-    * and each micro-batch runs a stateless executor-side filter over the
-    * doc's 4 band keys — no stream-static join, no state store, no
+    * The frozen band index rides the plan as one set literal (kilobytes per
+    * thousand eval docs; Catalyst turns the `isin` into a hash-set `InSet`)
+    * and each micro-batch runs a stateless, code-generated filter over the
+    * doc's 4 band keys — no UDF, no stream-static join, no state store, no
     * shuffle. A band hit only MIGHT be true contamination (LSH candidate
     * probability), so, unlike the exact-shingle gate, it is conservative
     * in the safe direction: it can drop an extra clean doc, never keep a
     * near-dup of the benchmark. Input needs a `text` column. */
   def minhashGate(docs: DataFrame, bandIndex: Set[String]): DataFrame = {
-    val idxB = docs.sparkSession.sparkContext.broadcast(bandIndex)
-    val anyHit = udf((ks: Seq[String]) =>
-      ks != null && ks.exists(idxB.value.contains))
-    docs.filter(!anyHit(bandKeys(col("text"))))
+    val keys = bandIndex.toSeq
+    docs.filter(!overBands(col("text"), lit(false))(
+      _.map(_.isin(keys: _*)).reduce(_ || _)))
   }
 
   /** STREAMING CURATION COMPOSITION (pre-budget stages) — the arrival-time
@@ -625,8 +629,8 @@ object Jobs {
     *   2. decontamination ([[contaminationGate]] — the static eval set's
     *      sorted shingle keys, broadcast at 8 B per key, one native probe
     *      per doc);
-    *   3. content hash `h`, watermark and `dropDuplicatesWithinWatermark`
-    *      ([[streamingDedup]]);
+    *   3. content hash `h`, a 10-minute watermark and
+    *      `dropDuplicatesWithinWatermark` ([[streamingDedup]]);
     *   4. `n_tokens`.
     *
     * Both gates run in the map stage, below the dedup's shuffle, so junk
@@ -644,10 +648,9 @@ object Jobs {
     * Pure `DataFrame => DataFrame`: these stages run inside the streaming
     * plan itself. The token-budget stage needs cross-batch state and lives
     * in [[curationSink]]'s foreachBatch. Input needs (doc_id, text, ts). */
-  def curationStream(docs: DataFrame, evalTexts: DataFrame,
-      minTokens: Int = 5, delay: String = "10 minutes"): DataFrame =
-    contaminationGate(qualityGate(docs, minTokens), evalTexts)
-      .transform(streamingDedup(_, "text", "ts", delay))
+  def curationStream(docs: DataFrame, evalTexts: DataFrame): DataFrame =
+    contaminationGate(qualityGate(docs), evalTexts)
+      .transform(streamingDedup(_, "text", "ts"))
       .withColumn("n_tokens", tokenCount)
 
   /** Freeze a trained DSIR λ table ([[graft.operators.Sampling.dsirLambda]],
@@ -799,6 +802,10 @@ object Jobs {
       .foreachBatch((batch: DataFrame, _: Long) =>
         onBatch(annServeBatch(batch, index, labels, cents, k)))
 
+  /** One [[curationSink]] ledger entry: the running token total before
+    * the batch and the batch's own total. */
+  final case class Ledger(base: Long, total: Long)
+
   /** The budget + emit stage of the streaming curation job: a foreachBatch
     * sink that keeps the greedy running token total across micro-batches
     * and emits each batch's selected docs (cum_tokens ≤ budget, the batch
@@ -825,46 +832,27 @@ object Jobs {
     * production) bounds it.
     *
     * Recovery: with `stateDir` set, the running total is CRASH-RECOVERABLE
-    * and batch-replay-IDEMPOTENT via a per-batch ledger (the
-    * [[writeBatchIdempotent]] discipline applied to driver state). Before
-    * a batch is emitted, its (base, total) is atomically written to
-    * `stateDir/batch-<id>`; a restarted query seeds the counter from the
-    * newest ledger entry (max base+total — totals are non-negative, so
-    * that is the latest committed batch), and a REPLAYED batch (crash
-    * between emit and checkpoint commit) reads its own ledger entry back
-    * and recomputes the identical selection instead of double-counting.
-    * One tiny file per micro-batch: a long-running deployment compacts
-    * old entries the same way it expires checkpoint files. `stateDir =
-    * None` keeps the in-memory counter (tests, bounded replays). */
+    * and batch-replay-IDEMPOTENT via a per-batch [[Ledger]] kept in Spark's
+    * own metadata log (`HDFSMetadataLog` over `stateDir`, the class of the
+    * query's offset and commit logs, writing through the session's
+    * checkpoint-file manager). Before a batch is emitted its (base, total)
+    * is added under the batch id; the add publishes atomically and never
+    * overwrites. A restarted query seeds the counter from the latest entry
+    * (base + total: totals are non-negative, so the newest batch holds the
+    * largest running total), and a REPLAYED batch (crash between emit and
+    * checkpoint commit) finds its entry already there, reads its recorded
+    * base back and recomputes the identical selection instead of
+    * double-counting. One tiny file per micro-batch: a long-running
+    * deployment purges old entries the way it expires checkpoint files.
+    * `stateDir = None` keeps the in-memory counter (tests, bounded
+    * replays). */
   def curationSink(gated: DataFrame, budget: Long,
       stateDir: Option[String] = None)(
       onBatch: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
     import org.apache.spark.sql.Row
-    def ledger(id: Long) = Paths.get(stateDir.get, f"batch-$id%012d")
-    def readLedger(p: java.nio.file.Path): (Long, Long) = {
-      val Array(b, t) = Files.readString(p).trim.split(' ')
-      (b.toLong, t.toLong)
-    }
-    val seed = stateDir.map { dir =>
-      Files.createDirectories(Paths.get(dir))
-      val listing = Files.list(Paths.get(dir))
-      try {
-        val it = listing.iterator()
-        var m = 0L
-        while (it.hasNext) {
-          val p = it.next()
-          // strict name match: an orphaned "tmp-*" from a crash between
-          // create and atomic move must never be parsed as a ledger entry
-          if (p.getFileName.toString.matches("batch-\\d{12}")) {
-            val (b, t) = readLedger(p)
-            m = math.max(m, b + t)
-          }
-        }
-        m
-      } finally listing.close()
-    }.getOrElse(0L)
+    val log = stateDir.map(new HDFSMetadataLog[Ledger](gated.sparkSession, _))
+    val seed = log.flatMap(_.getLatest()).fold(0L) { case (_, l) => l.base + l.total }
     val idType = gated.schema("doc_id").dataType
     require(Seq(LongType, IntegerType, ShortType, ByteType).contains(idType),
       s"curationSink orders by doc_id as a long; got doc_id: $idType")
@@ -884,18 +872,11 @@ object Jobs {
           acc
         }
         val total = acc
-        val replayed = stateDir.nonEmpty && Files.exists(ledger(id))
-        val base =
-          if (replayed) readLedger(ledger(id))._1 else spent.get()
-        // ledger BEFORE emit: a crash mid-emit replays this batch with the
-        // same recorded base, so the re-emitted selection is identical
-        stateDir.foreach { _ =>
-          if (!replayed) {
-            val tmp = Files.createTempFile(
-              Paths.get(stateDir.get), "tmp-", "")
-            Files.writeString(tmp, s"$base $total")
-            Files.move(tmp, ledger(id), StandardCopyOption.ATOMIC_MOVE)
-          }
+        // ledger BEFORE emit: a replayed batch finds its entry and reuses
+        // the recorded base, so the re-emitted selection is identical
+        val base = log match {
+          case Some(l) if !l.add(id, Ledger(spent.get(), total)) => l.get(id).get.base
+          case _ => spent.get()
         }
         val sel = rows.zip(cum).collect { case (r, c) if base + c <= budget =>
           Row.fromSeq(r.toSeq :+ (base + c)) }

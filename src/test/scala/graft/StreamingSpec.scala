@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.streaming.checkpointing.HDFSMetadataLog
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -861,22 +862,26 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
       // base 30 + 10 fits, + 8 does not; a doubly advanced counter (60)
       // would select nothing
       assert(rerun.filter(_._1 == 1L) == Seq((1L, 3L, 40L)), s"batch 1: $rerun")
-      def entry(id: Int) = Files.readString(state.resolve(f"batch-$id%012d")).trim
-      assert(entry(0) == "0 30" && entry(1) == "30 18",
-        s"ledger: ${entry(0)} / ${entry(1)}")
+      val ledger = new HDFSMetadataLog[Jobs.Ledger](spark, state.toString)
+      assert(ledger.get(0).contains(Jobs.Ledger(0, 30)) &&
+        ledger.get(1).contains(Jobs.Ledger(30, 18)),
+        s"ledger: ${ledger.get(0)} / ${ledger.get(1)}")
     } finally spark.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
   }
 
   test("curationSink seeding ignores a stray tmp- file in the state dir") {
-    // an orphan of a crash between the ledger's temp write and its atomic
-    // move; parsed as an entry it would seed the counter at 2000, past
-    // the budget, and nothing would be selected
+    // orphans of a crash between a ledger entry's temp write and its
+    // publish, in the hand-written name and in the checkpoint-file
+    // manager's; parsed as an entry either would seed the counter at 2000,
+    // past the budget, and nothing would be selected
     import spark.implicits._
     implicit val sq = spark.sqlContext
     import java.nio.file.Files
     val ckpt = tempDir("cur_tmp_ckpt")
     val state = tempDir("cur_tmp_state")
     Files.writeString(state.resolve("tmp-12345"), "1000 1000")
+    Files.writeString(state.resolve(s".0.${java.util.UUID.randomUUID()}.tmp"),
+      """{"base":1000,"total":1000}""")
     val evalSet = Seq((1 to 9).map(i => s"bench$i").mkString(" ")).toDF("text")
     val mem = MemoryStream[(Long, String, Long)]
     val shaped = mem.toDF().toDF("doc_id", "text", "us")
@@ -895,7 +900,8 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
       q.processAllAvailable()
     } finally q.stop()
     assert(got.toSet == Set((1L, 12L), (2L, 30L)), s"seeded from the tmp file: $got")
-    assert(Files.readString(state.resolve("batch-000000000000")).trim == "0 30")
+    assert(new HDFSMetadataLog[Jobs.Ledger](spark, state.toString).get(0)
+      .contains(Jobs.Ledger(0, 30)))
   }
 
   test("anomalyAlerts: online z-alerts match the batch prior-window replay exactly") {
@@ -1074,6 +1080,31 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
         s"leaked ${(kept diff want).take(3)}")
     assert(flagged.nonEmpty && kept.nonEmpty,
       s"fixture must exercise both verdicts: dropped ${flagged.size}, kept ${kept.size}")
+  }
+
+  test("minhashGate filters by a Catalyst set membership, with no ScalaUDF") {
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    import org.apache.spark.sql.catalyst.expressions.{InSet, ScalaUDF}
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    def words(p: String) = (1 to 12).map(i => s"$p$i").mkString(" ")
+    // 3 eval docs: 12 band keys, past the optimizer's In → InSet threshold
+    val idx = Jobs.freezeBandIndex(Seq(words("a"), words("b"), words("c")).toDF("text"))
+    val mem = MemoryStream[(Long, String)]
+    val q = Jobs.minhashGate(mem.toDF().toDF("doc_id", "text"), idx)
+      .select("doc_id")
+      .writeStream.format("memory").queryName("minhash_gate_plan")
+      .outputMode("append").start()
+    mem.addData((1L, words("b")), (2L, words("z")), (3L, "too short"), (4L, null))
+    val plan = try {
+      q.processAllAvailable()
+      q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+    } finally q.stop()
+    val exprs = plan.flatMap(_.expressions)
+    assert(!exprs.exists(_.exists(_.isInstanceOf[ScalaUDF])), plan)
+    assert(exprs.exists(_.exists(_.isInstanceOf[InSet])), plan)
+    // a short doc and a null text have no band keys: kept, never indexed
+    assert(spark.table("minhash_gate_plan").as[Long].collect().toSet == Set(2L, 3L, 4L))
   }
 
   test("annGate: streamed survivors of the frozen-index near-dup gate " +
